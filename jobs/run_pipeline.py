@@ -4,11 +4,12 @@ path).
   spark-submit --master <cluster> \\
     --py-files dist/oplog_analyzer_spark.zip \\
     jobs/run_pipeline.py --input /path/transcripts --work-dir /path/work \\
-    [--batches 16] [--resume]
+    [--batches 16]
 
-Runs the checkpointed parse→enrich→route→aggregate pipeline; on --resume it
-skips completed batches (per-partition lineage in <work-dir>/checkpoint.json)
-and recomputes exact final aggregates from the routed sinks.
+Runs the checkpointed parse→enrich→route→aggregate pipeline.  Re-running
+with the same --work-dir resumes: it skips completed batches (per-partition
+lineage in <work-dir>/checkpoint.json) and recomputes exact final
+aggregates from the routed sinks.
 """
 
 from __future__ import annotations
@@ -22,7 +23,6 @@ def main() -> None:
     ap.add_argument("--input", required=True, help="transcript parquet/Iceberg dir")
     ap.add_argument("--work-dir", required=True)
     ap.add_argument("--batches", type=int, default=16)
-    ap.add_argument("--resume", action="store_true", help="(informational; resume is automatic from the checkpoint)")
     ap.add_argument("--no-diff-stats", action="store_true")
     args = ap.parse_args()
 

@@ -15,7 +15,7 @@ configuration is pinned in work_dir/tail_meta.json).
     [--threshold N [--full-document]] [--shard-index 0,2] [--shards N] \
     [--dump [--dump-with-shard]] \
     [--id-stats [--id-stats-threshold N] [--top-ids K] [--doc-sizes <dir>]] \
-    [--buckets 1000,10000] [--stateful] [--lag-wallclock "ts"] \
+    [--buckets 1000,10000] [--lag-wallclock "ts"] \
     [--continuous [--processing-time "5 seconds"] [--heartbeat-sec 30]]
 
 ``--continuous`` is the reference's actual runtime behavior: block forever
@@ -89,9 +89,6 @@ def main() -> None:
         "missing documents get the -1 sentinel "
         "(TailCommand.java:398-463)",
     )
-    ap.add_argument("--stateful", action="store_true",
-                    help="maintain the accumulator as applyInPandasWithState "
-                         "operator state instead of merge-safe partials")
     ap.add_argument(
         "--continuous", action="store_true",
         help="T1/T5 full parity: keep tailing forever (processingTime "
@@ -154,18 +151,11 @@ def main() -> None:
         ),
         n_shards=args.shards,
     )
-    if args.stateful:
-        if args.continuous:
-            ap.error("--stateful and --continuous are mutually exclusive "
-                     "(the stateful form carries only the ns::op report)")
-        tail.run_stateful_available()
-        print(console_report(tail.stateful_report()))
-    elif args.continuous:
+    if args.continuous:
         _run_continuous(tail, args)
-        print(console_report(tail.report()))
     else:
         tail.run_available()
-        print(console_report(tail.report()))
+    print(console_report(tail.report()))
     if args.threshold is not None:
         print(f"\n--- OPS >= {args.threshold} B (F5 side output, cumulative) ---")
         print(console_report(tail.over_threshold_report(), limit=50))

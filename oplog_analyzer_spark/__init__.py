@@ -15,7 +15,7 @@ similarity / text-analysis operators, and fan-out category sinks.
 Layout:
     session.py            SparkSession factory tuned for scale (AQE, Arrow)
     transcripts.py        deterministic distributed transcript generator
-    operators/parse.py    grok/regex parse stage (vectorized, no per-row Python)
+    operators/parse.py    native regex parse stage + diff-stats pandas UDF
     operators/filters.py  F1–F8 filter family
     operators/enrich.py   J1/J3 broadcast lookup enrichment
     operators/aggregate.py A1–A16 aggregate family

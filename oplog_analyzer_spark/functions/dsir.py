@@ -200,7 +200,6 @@ def dsir_weights(
     seed: int = 7,
     hash_fn: str = "xxhash64",
     k: int | None = None,
-    persist_counts: bool = True,
     persist_registry: list | None = None,
 ) -> DataFrame:
     """The composed DSIR frame: hashed features → bucket log-ratios
@@ -208,28 +207,25 @@ def dsir_weights(
     plus the top-``k`` ``selected`` verdict when ``k`` is given.
 
     The counts frame has two consumers (the ratio aggregate and the score
-    join) plus the k-th-threshold probe, so by default it is persisted —
-    without that, Spark re-executes the tokenize→explode→aggregate
-    subtree once per consumer (the dominant cost at corpus scale).  Pass
-    ``persist_counts=False`` if the caller manages caching itself; the
-    cache is left to LRU eviction (one (id, bucket≤B, c) frame, far
-    smaller than the corpus text)."""
-    counts = hashed_ngram_counts(df, id_col, text_col, n_buckets, seed, hash_fn)
-    if persist_counts:
-        counts = counts.persist()
-        if persist_registry is not None:
-            persist_registry.append(counts)
+    join) plus the k-th-threshold probe, so it is persisted — without
+    that, Spark re-executes the tokenize→explode→aggregate subtree once
+    per consumer (the dominant cost at corpus scale).  The cache is left
+    to LRU eviction (one (id, bucket≤B, c) frame, far smaller than the
+    corpus text) unless the caller passes ``persist_registry``."""
+    counts = hashed_ngram_counts(
+        df, id_col, text_col, n_buckets, seed, hash_fn
+    ).persist()
+    if persist_registry is not None:
+        persist_registry.append(counts)
     ratios = dsir_bucket_ratios(counts, target.select(id_col), n_buckets)
     scores = dsir_scores(df, counts, ratios, id_col)
     if k is None:
         return scores
-    if persist_counts:
-        # the selection reads scores twice (the k-th-threshold probe is an
-        # action, then the caller's own action recomputes the frame);
-        # scores is one skinny row per doc, so cache it and both passes —
-        # including the ratio aggregate feeding its broadcast join — run
-        # once
-        scores = scores.persist()
-        if persist_registry is not None:
-            persist_registry.append(scores)
+    # the selection reads scores twice (the k-th-threshold probe is an
+    # action, then the caller's own action recomputes the frame); scores is
+    # one skinny row per doc, so cache it and both passes — including the
+    # ratio aggregate feeding its broadcast join — run once
+    scores = scores.persist()
+    if persist_registry is not None:
+        persist_registry.append(scores)
     return dsir_selected(scores, k)

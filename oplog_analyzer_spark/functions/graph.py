@@ -94,9 +94,13 @@ def _small_star(edges: DataFrame) -> DataFrame:
     Same window-min rewrite as :func:`_large_star`, plus the union is
     folded into one projection: the input edge set is distinct, so exactly
     one row per u carries v == min — that row becomes the (u, m) self-link
-    and every other row the (v, m) relink, no join and no union."""
+    and every other row the (v, m) relink, no join and no union.
+
+    ``m`` is ``least(min, v)``: the same value (min ≤ v), but it keeps
+    ``v``'s nullability, where a window min is always nullable — so the
+    output schema does not depend on how many rounds ran."""
     w = Window.partitionBy("u")
-    e2 = edges.withColumn("m", F.min("v").over(w))
+    e2 = edges.withColumn("m", F.least(F.min("v").over(w), F.col("v")))
     out = e2.select(
         F.when(F.col("v") == F.col("m"), F.col("u"))
         .otherwise(F.col("v"))
@@ -132,7 +136,15 @@ def _is_star_forest(e: DataFrame) -> bool:
     return (row["viol"] or 0) == 0
 
 
-def _local_components(spark, rows, edge_schema) -> DataFrame:
+def _labels(e: DataFrame) -> DataFrame:
+    """(id, component) rows of a star forest: every child labelled with
+    its root, and every root with itself."""
+    leaves = e.select(F.col("u").alias("id"), F.col("v").alias("component"))
+    centers = e.select(F.col("v").alias("id"), F.col("v").alias("component")).distinct()
+    return leaves.union(centers).distinct()
+
+
+def _local_components(spark, rows, out_schema) -> DataFrame:
     """Finish a SMALL collected edge set on the driver with union-find —
     the multi-level pattern: contract distributed until the graph fits a
     bounded buffer, then stop paying ~2 shuffles + 2 jobs per round for a
@@ -143,7 +155,8 @@ def _local_components(spark, rows, edge_schema) -> DataFrame:
     point, which equals UTF8String's UTF-8 byte order).  The result frame
     is built from pandas through Arrow — never ``createDataFrame(list)``,
     whose Python-RDD scan would respawn workers on every downstream
-    broadcast."""
+    broadcast.  ``out_schema`` is the distributed path's output schema,
+    so both paths return the same schema, nullability included."""
     parent: dict = {}
 
     def find(x):
@@ -164,14 +177,6 @@ def _local_components(spark, rows, edge_schema) -> DataFrame:
                 ru, rv = rv, ru
             parent[rv] = ru
 
-    from pyspark.sql.types import StructField, StructType
-
-    out_schema = StructType(
-        [
-            StructField("id", edge_schema["u"].dataType),
-            StructField("component", edge_schema["v"].dataType),
-        ]
-    )
     if not parent:
         return spark.createDataFrame([], out_schema)
     import pandas as pd
@@ -235,7 +240,7 @@ def connected_components(
         if local_ok:
             head = e.limit(local_max_edges + 1).collect()
             if len(head) <= local_max_edges:
-                return _local_components(e.sparkSession, head, e.schema)
+                return _local_components(e.sparkSession, head, _labels(e).schema)
         if _is_star_forest(e):
             break
         e = _small_star(_large_star(e)).localCheckpoint(eager=True)
@@ -246,9 +251,7 @@ def connected_components(
             "list is astronomically chained)"
         )
 
-    leaves = e.select(F.col("u").alias("id"), F.col("v").alias("component"))
-    centers = e.select(F.col("v").alias("id"), F.col("v").alias("component")).distinct()
-    return leaves.union(centers).distinct()
+    return _labels(e)
 
 
 def dedup_clusters(

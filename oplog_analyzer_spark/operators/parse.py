@@ -8,9 +8,8 @@ a text column; extraction is:
   * single-group patterns → native ``regexp_extract`` (JVM, codegen'd)
   * id normalization → a pure JVM Column (``normalize_id_expr``) on the
     default path; the pandas twin remains the certification form
-  * multi-group grok + diff counting → **vectorized pandas UDFs** (Arrow
-    batches, ``pd.Series.str`` with precompiled patterns / C-level JSON
-    parse — never per-row interpreted work, per input_hint).  A pure-JVM
+  * diff counting → a **vectorized pandas UDF** (Arrow batches, C-level
+    JSON parse — never per-row interpreted work).  A pure-JVM
     diff counter was measured and REJECTED: the exact comma-counting
     identity (leaves = commas + 1 − empty containers on the
     string-literal-stripped block, fields = size(json_object_keys)) costs
@@ -35,24 +34,6 @@ _NS_RE = r"ns=([a-zA-Z0-9_.$]+)"
 _OP_RE = r"op:([iudcn])"
 _ID_RE = r"id=(\S+)"
 _DIFF_RE = re.compile(r"diff=(\{.*?\})(?: |$)")
-_GROK_RE = re.compile(r"ns=(?P<ns>[a-zA-Z0-9_.$]+) op:(?P<op>[iudcn]) id=(?P<id>\S+)")
-
-
-@pandas_udf(
-    StructType(
-        [
-            StructField("ns", StringType()),
-            StructField("op", StringType()),
-            StructField("id", StringType()),
-        ]
-    )
-)
-def grok_extract(text: pd.Series) -> pd.DataFrame:
-    """Multi-group grok in one vectorized pass (``Series.str.extract`` with
-    a precompiled pattern compiles to one C-level scan per Arrow batch).
-    Non-matching rows yield "" to match ``regexp_extract``'s no-match
-    behavior, so both parse paths are value-identical."""
-    return text.str.extract(_GROK_RE).fillna("")
 
 
 def normalize_id_expr(raw: F.Column) -> F.Column:
@@ -256,41 +237,23 @@ def _guarded_extract(marker: str, pattern: str) -> F.Column:
     ).otherwise(F.lit(""))
 
 
-def parse_transcripts(
-    df: DataFrame, with_diff_stats: bool = True, grok_udf: bool = False
-) -> DataFrame:
+def parse_transcripts(df: DataFrame, with_diff_stats: bool = True) -> DataFrame:
     """Full parse stage: text → (ns, op, id, size, diff_fields,
     total_elements, sub) derived columns.
 
-    Two equivalent extraction paths (pytest-asserted identical):
-      * default — native ``regexp_extract`` per field: stays inside
-        whole-stage codegen, lets Catalyst prune unused fields entirely
-        (a count() never evaluates them);
-      * ``grok_udf=True`` — ONE vectorized pandas UDF extracts ns/op/id in
-        a single compiled-regex pass per Arrow batch: fewer scans over the
-        text bytes, the right trade when all fields are consumed anyway and
-        the grok pattern grows beyond what per-field regexes express.
+    Each field is a native ``regexp_extract``: it stays inside whole-stage
+    codegen and lets Catalyst prune unused fields entirely (a count()
+    never evaluates them).  Text without a field's marker yields "".
     ``size`` is the raw byte length — the reference's universal size
     measure ``doc.getByteBuffer().remaining()`` (BaseOplogCommand.java:92).
     """
-    if grok_udf:
-        out = (
-            df.withColumn("_g", grok_extract("text"))
-            .withColumn("ns", F.col("_g.ns"))
-            .withColumn("op", F.col("_g.op"))
-            .withColumn("id", normalize_id_expr(F.col("_g.id")))
-            .drop("_g")
-            .withColumn("size", F.octet_length("text").cast("long"))
-            .withColumn("sub", _guarded_extract("sub:", r"sub:(\S+)"))
-        )
-    else:
-        out = (
-            df.withColumn("ns", F.regexp_extract("text", _NS_RE, 1))
-            .withColumn("op", F.regexp_extract("text", _OP_RE, 1))
-            .withColumn("id", normalize_id_expr(F.regexp_extract("text", _ID_RE, 1)))
-            .withColumn("size", F.octet_length("text").cast("long"))
-            .withColumn("sub", _guarded_extract("sub:", r"sub:(\S+)"))
-        )
+    out = (
+        df.withColumn("ns", F.regexp_extract("text", _NS_RE, 1))
+        .withColumn("op", F.regexp_extract("text", _OP_RE, 1))
+        .withColumn("id", normalize_id_expr(F.regexp_extract("text", _ID_RE, 1)))
+        .withColumn("size", F.octet_length("text").cast("long"))
+        .withColumn("sub", _guarded_extract("sub:", r"sub:(\S+)"))
+    )
     if with_diff_stats:
         # struct column kept intact (see diff_stats docstring); downstream
         # reads diff.diff_fields / diff.total_elements — free once written

@@ -12,9 +12,7 @@ lacks entirely (T8 — no resume across restarts, TailCommand.java:540):
       - DataFrame mode (computed inputs): the input is staged exactly once,
         partitioned by a deterministic ``batch_id``, and each batch reads
         only its ``batch_id=<k>/`` directory — partition pruning by path.
-    Either way the whole run reads each input row O(1) times; the previous
-    design filtered the full input on a computed hash per batch (N full
-    scans at N batches — ~32 full scans of a 100 TB table at 16 batches).
+    Either way the whole run reads each input row O(1) times.
   * per-batch lineage (rows in/out) comes from ``Observation`` hooks on the
     already-running write job — no second count() scan;
   * each batch lands in its own ``batch=<k>/category=<c>/`` parquet
@@ -138,13 +136,11 @@ class TranscriptPipeline:
         resume processes the same groups even if files were added since
         (Iceberg-manifest-style planning).
 
-        The plan itself lives in a WRITE-ONCE sidecar (``file_plan.json``,
-        published atomically); the checkpoint holds only its path and file
-        count.  Inlining the plan in the checkpoint would rewrite the full
-        file list on EVERY batch completion — at 100 TB that's ~10^6 file
-        URIs ≈ 100 MB of JSON re-serialized per batch, turning checkpoint
-        saves into the driver bottleneck.  The sidecar is immutable after
-        publish, so the plan stays as pinned as before."""
+        The plan lives in a WRITE-ONCE sidecar (``file_plan.json``,
+        published atomically); the checkpoint holds only its work_dir
+        -relative path (a moved work_dir still resumes) and file count, so
+        a batch completion never re-serializes the full file list (~10^6
+        URIs at 100 TB)."""
         files = self._list_parquet_files(input_path)
         groups: list[list[str]] = [[] for _ in range(self.num_batches)]
         for i, f in enumerate(files):
@@ -156,32 +152,19 @@ class TranscriptPipeline:
             json.dump({"groups": groups}, f)
         os.replace(tmp, plan_path)  # atomic publish, never rewritten
         self._file_groups_cache = groups
-        # stored RELATIVE to work_dir so a moved/renamed work_dir still
-        # resumes (ADVICE r04 — the legacy inline layout was
-        # relocation-safe; the sidecar must be too)
         state["file_plan"] = "file_plan.json"
         state["file_plan_n_files"] = len(files)
         self._save_checkpoint(state)
 
     def _file_groups(self, state: dict) -> list[list[str]]:
-        """The pinned plan: sidecar-backed (current layout) or inline
-        (pre-r4 checkpoints keep resuming unchanged)."""
-        if "file_groups" in state:  # legacy inline layout
-            return state["file_groups"]
+        """The pinned plan, read once from its sidecar."""
         if self._file_groups_cache is None:
-            plan = state["file_plan"]
-            if not os.path.isabs(plan):  # current layout: work_dir-relative
-                plan = os.path.join(self.work_dir, plan)
-            elif not os.path.exists(plan):
-                # r4 checkpoints stored the absolute path; if the work_dir
-                # moved, the sidecar moved with it — look beside us
-                plan = os.path.join(self.work_dir, os.path.basename(plan))
-            with open(plan) as f:
+            with open(os.path.join(self.work_dir, state["file_plan"])) as f:
                 self._file_groups_cache = json.load(f)["groups"]
         return self._file_groups_cache
 
     def _batch_df(self, state: dict, b: int) -> DataFrame | None:
-        if "file_groups" in state or "file_plan" in state:
+        if "file_plan" in state:
             group = self._file_groups(state)[b]
             if not group:
                 return None
@@ -231,9 +214,16 @@ class TranscriptPipeline:
                 "— use a fresh work_dir (or resume with the original input "
                 "form)"
             )
+        if "file_groups" in state:
+            # the inline-plan layout is no longer read; re-planning would
+            # keep its completed entries against a new plan and skip them
+            raise ValueError(
+                f"work_dir {self.work_dir!r} has an unsupported checkpoint "
+                "layout (inline file_groups) — use a fresh work_dir"
+            )
         state["mode"] = mode
         if input_path is not None:
-            if "file_groups" not in state and "file_plan" not in state:
+            if "file_plan" not in state:
                 self._plan_file_groups(input_path, state)
         elif not state.get("staged"):
             if transcripts is None:
@@ -284,11 +274,8 @@ class TranscriptPipeline:
 
     def _routed_schema_ddl(self) -> str:
         """The routed() contract schema — identical column NAMES, TYPES and
-        ORDER whether or not any batch produced output (ADVICE r03: the
-        old fallback omitted the read path's extra ``batch`` partition
-        column and kept pre-join order while the real read had ``tool``
-        first — positional consumers bound differently per run shape).
-        ``tool`` leads because the routing join keys on it; ``batch`` is a
+        ORDER whether or not any batch produced output, so positional
+        consumers bind the same way on every run shape.  ``tool`` leads because the routing join keys on it; ``batch`` is a
         physical layout detail and not part of the contract."""
         ddl = (
             "tool string, conv_id string, turn_idx int, role string, "

@@ -107,19 +107,13 @@ def write_routed(
         writer.save(out_dir)
 
 
-def per_sink_aggregates(routed: DataFrame, exact_distinct: bool = True) -> DataFrame:
+def per_sink_aggregates(routed: DataFrame) -> DataFrame:
     """S7 analog — per-sink aggregate report (north_star): per (category,
     ns): op counts, distinct conv_id, min/max ts.  Mirrors the
-    OplogTailingAnalyzer accumulator report keyed by routing target.
+    OplogTailingAnalyzer accumulator report keyed by routing target;
+    ``distinct_conv`` is an exact countDistinct.
 
-    ``exact_distinct=True`` is the correctness-gate form: exact
-    countDistinct shuffles (category, ns, conv_id) — fine on a cluster
-    where the shuffle spreads over every executor's disk/NIC.
-    ``exact_distinct=False`` swaps in approx_count_distinct (HLL++, 2%
-    rsd): partial sketches merge map-side, so the shuffle carries only
-    sketch bytes per group — the form a 10^12-turn run uses.
-
-    Plan shape (r7, exact path): Catalyst's single-query rewrite of
+    Plan shape (r7): Catalyst's single-query rewrite of
     ``countDistinct`` + regular aggs partial-aggregates on (category, ns,
     conv_id) — and on a turns corpus that key is nearly unique per row
     (measured 6.16M rows → 5.24M groups, a 1.18× reduction), so the first
@@ -130,8 +124,7 @@ def per_sink_aggregates(routed: DataFrame, exact_distinct: bool = True) -> DataF
     bare keys: readback aggregate 1.84 → 1.49 s min over 6 interleaved
     rounds at 5M turns / 16c, identical rows.  The join is null-safe so a
     null ns/category group matches its twin exactly as the single-pass
-    form groups it.  The HLL path keeps the one-pass form — sketches
-    merge map-side, so its exchange never carried the blowup.
+    form groups it.
 
     The split fires only when ``routed`` is cheaply re-scannable (a plain
     file scan, e.g. the bench's sink read-back): two branches over a
@@ -151,12 +144,6 @@ def per_sink_aggregates(routed: DataFrame, exact_distinct: bool = True) -> DataF
         F.max("ts").alias("max_ts"),
         F.sum("size").alias("total_bytes"),
     ]
-    if not exact_distinct:
-        return routed.groupBy("category", "ns").agg(
-            *regular,
-            F.approx_count_distinct("conv_id", 0.02).alias("distinct_conv"),
-            *tail,
-        )
     if not _cheaply_rescannable(routed):
         return routed.groupBy("category", "ns").agg(
             *regular,

@@ -27,9 +27,7 @@ commutative/idempotent reduction that the partials algebra handles with
 ONE aggregate at read time and zero Python in the stream.  The state-store
 form adds a per-key Python round-trip per batch and pins every admitted
 hash in the state store forever (unbounded state, no watermark can evict
-it — a duplicate may arrive years later).  The tail keeps a true
-``applyInPandasWithState`` accumulator for T6 parity where per-key logic
-is genuinely sequential; dedup admission is not.
+it — a duplicate may arrive years later).
 
 Determinism contract: the admitted id per hash depends on ARRIVAL order
 (which batch saw the hash first) — inherent to any streaming dedup.  When

@@ -149,8 +149,6 @@ class TailStream:
         self.over_partials_dir = os.path.join(work_dir, "over_partials")
         self.over_rows_dir = os.path.join(work_dir, "over_rows")
         self.dump_dir = os.path.join(work_dir, "dump")
-        self.stateful_dir = os.path.join(work_dir, "stateful")
-        self.stateful_checkpoint_dir = os.path.join(work_dir, "stateful_ckpt")
         self._enforce_meta()
 
     # -- configuration pinning ---------------------------------------------
@@ -179,8 +177,8 @@ class TailStream:
         """Pin the accumulator-defining options at work_dir creation;
         raise on resume mismatch instead of silently merging partials with
         different meanings (e.g. missing gt_* bucket columns surfacing as
-        nulls).  Pre-existing work_dirs without a meta file (pre-r5
-        layouts) adopt the current configuration."""
+        nulls).  A work_dir without a meta file pins the current
+        configuration."""
         path = os.path.join(self.work_dir, "tail_meta.json")
         mine = self._meta()
         if os.path.exists(path):
@@ -365,95 +363,6 @@ class TailStream:
             .option("checkpointLocation", self.checkpoint_dir)
             .trigger(processingTime=processing_time)
             .start()
-        )
-
-    # -- T6 as TRUE operator state (applyInPandasWithState) ----------------
-    def run_stateful_available(self) -> None:
-        """Alternative T6 path: the per-(ns,op) accumulator maintained as
-        explicit stream state (the reference's in-memory accumulator map,
-        EntryAccumulator.java:41-71, as a Spark stateful operator).  State
-        lives in the stream checkpoint, so a later drain RESUMES the
-        accumulator exactly (T8) — no partial-merging at read time.  Each
-        micro-batch emits the UPDATED groups; the sink keeps the newest row
-        per group (idempotent per-batch_id overwrite, as _sink_batch)."""
-        if self.dump or self.id_stats or self.threshold is not None:
-            # the row-level sinks live on the partials path (_sink_batch);
-            # the stateful form maintains ONLY the ns::op accumulator
-            raise ValueError(
-                "dump/id_stats/threshold require the partials path "
-                "(run_available); the stateful accumulator carries only "
-                "the ns::op report"
-            )
-        import pandas as pd  # noqa: F401  (worker-side import)
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        out_schema = (
-            "ns string, op string, count long, total_size long, "
-            "min_size long, max_size long"
-        )
-        state_schema = "count long, total_size long, min_size long, max_size long"
-
-        def update(key, pdfs, state):
-            import pandas as pd
-
-            count = total = 0
-            mn = mx = None
-            if state.exists:
-                count, total, mn, mx = state.get
-            for pdf in pdfs:
-                s = pdf["size"]
-                count += int(len(s))
-                total += int(s.sum())
-                bmn, bmx = int(s.min()), int(s.max())
-                mn = bmn if mn is None else min(mn, bmn)
-                mx = bmx if mx is None else max(mx, bmx)
-            state.update((count, total, mn, mx))
-            yield pd.DataFrame(
-                {
-                    "ns": [key[0]], "op": [key[1]], "count": [count],
-                    "total_size": [total], "min_size": [mn], "max_size": [mx],
-                }
-            )
-
-        parsed = exclude_system_namespaces(
-            self._apply_filters(
-                parse_transcripts(self._source(), with_diff_stats=False)
-            )
-        )
-        updates = parsed.groupBy("ns", "op").applyInPandasWithState(
-            update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-        )
-
-        def sink(batch: DataFrame, batch_id: int) -> None:
-            batch.withColumn("batch_id", F.lit(batch_id)).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(self.stateful_dir, f"bid={batch_id}"))
-
-        q = (
-            updates.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", self.stateful_checkpoint_dir)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    def stateful_report(self) -> DataFrame:
-        """Newest emitted row per (ns,op) across batches = the accumulator's
-        current state, with floor-avg display parity."""
-        from pyspark.sql import Window
-
-        rows = self.spark.read.option("basePath", self.stateful_dir).parquet(
-            os.path.join(self.stateful_dir, "bid=*")
-        )
-        w = Window.partitionBy("ns", "op").orderBy(F.desc("batch_id"))
-        latest = (
-            rows.withColumn("__r", F.row_number().over(w))
-            .filter(F.col("__r") == 1)
-            .drop("__r", "batch_id")
-        )
-        return latest.withColumn(
-            "avg_size", F.floor(F.col("total_size") / F.col("count")).cast("long")
         )
 
     def _read_partials(self, base_dir: str, empty_schema: str) -> DataFrame | None:

@@ -1275,8 +1275,11 @@ def test_connected_components_star_input_zero_rounds(spark, monkeypatch):
 def test_connected_components_local_finish_equals_distributed(spark):
     """r7: the bounded driver union-find finish (default, fires when the
     canonical edge set fits local_max_edges) must label identically to the
-    distributed star alternation on the same graphs — longs, strings, and
-    an empty set; the cap probe must not disturb the distributed result."""
+    distributed star alternation on the same graphs — longs, strings,
+    non-nullable ids from ``spark.range`` (a chain that needs rounds, and a
+    star that needs none) and an empty set — with the same schema,
+    nullability included; the cap probe must not disturb the distributed
+    result."""
     import random
 
     from oplog_analyzer_spark.functions import graph as G
@@ -1284,37 +1287,26 @@ def test_connected_components_local_finish_equals_distributed(spark):
     rng = random.Random(99)
     n = 80
     edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(150)]
-    df = spark.createDataFrame(edges, "id_a long, id_b long")
-    local = {
-        r["id"]: r["component"] for r in G.connected_components(df).collect()
-    }
-    dist = {
-        r["id"]: r["component"]
-        for r in G.connected_components(df, local_max_edges=0).collect()
-    }
-    assert local == dist
-
-    sdf = spark.createDataFrame(
-        [("conv_b", "conv_a"), ("conv_c", "conv_b"), ("zz", "yy")],
-        "id_a string, id_b string",
-    )
-    local_s = {
-        r["id"]: r["component"] for r in G.connected_components(sdf).collect()
-    }
-    dist_s = {
-        r["id"]: r["component"]
-        for r in G.connected_components(sdf, local_max_edges=0).collect()
-    }
-    assert local_s == dist_s
-    assert G.connected_components(sdf).schema == G.connected_components(
-        sdf, local_max_edges=0
-    ).schema or [
-        (f.name, f.dataType)
-        for f in G.connected_components(sdf).schema.fields
-    ] == [
-        (f.name, f.dataType)
-        for f in G.connected_components(sdf, local_max_edges=0).schema.fields
+    inputs = [
+        spark.createDataFrame(edges, "id_a long, id_b long"),
+        spark.createDataFrame(
+            [("conv_b", "conv_a"), ("conv_c", "conv_b"), ("zz", "yy")],
+            "id_a string, id_b string",
+        ),
+        spark.range(0, 40).select(
+            F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+        ),
+        spark.range(1, 10).select(
+            F.col("id").alias("id_a"), F.lit(0).cast("long").alias("id_b")
+        ),
     ]
+    for df in inputs:
+        local = G.connected_components(df)
+        dist = G.connected_components(df, local_max_edges=0)
+        assert local.schema == dist.schema
+        assert {r["id"]: r["component"] for r in local.collect()} == {
+            r["id"]: r["component"] for r in dist.collect()
+        }
 
     empty = spark.createDataFrame([], "id_a long, id_b long")
     assert G.connected_components(empty).count() == 0

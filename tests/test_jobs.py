@@ -122,15 +122,9 @@ def test_run_tail_cli(spark, transcripts, tmp_path, monkeypatch, capsys):
         monkeypatch, capsys,
     )
     assert "total_size" in out and "lag_sec" in out
-    out2 = _run(
-        main,
-        ["--input", src, "--work-dir", str(tmp_path / "wd_state"), "--stateful"],
-        monkeypatch, capsys,
-    )
-    assert "avg_size" in out2
     # the reference flagship form: tail -t N --idStats --dump
     # --includeNamespace ... (TailCommand.java:74-123) on the streaming path
-    out3 = _run(
+    out2 = _run(
         main,
         ["--input", src, "--work-dir", str(tmp_path / "wd_full"),
          "--ns", ",".join(f"db{d}.coll{c}" for d in range(4) for c in range(8)),
@@ -139,9 +133,9 @@ def test_run_tail_cli(spark, transcripts, tmp_path, monkeypatch, capsys):
          "--top-ids", "7", "--dump"],
         monkeypatch, capsys,
     )
-    assert "OPS >= 100 B" in out3
-    assert "TOP 7 IDS" in out3
-    assert "dump sink:" in out3
+    assert "OPS >= 100 B" in out2
+    assert "TOP 7 IDS" in out2
+    assert "dump sink:" in out2
 
 
 def test_run_tail_continuous_sigint_and_stop_file(

@@ -44,8 +44,9 @@ def _pandas_parse(pdf: pd.DataFrame) -> pd.DataFrame:
     """Independent reference implementation of the parse stage (pure
     pandas, written against the text layout spec — not the Spark code)."""
     out = pd.DataFrame(index=pdf.index)
-    out["ns"] = pdf["text"].str.extract(r"ns=([a-zA-Z0-9_.$]+)", expand=False)
-    out["op"] = pdf["text"].str.extract(r"op:([iudcn])", expand=False)
+    # a text without the field's marker yields "" (regexp_extract no-match)
+    out["ns"] = pdf["text"].str.extract(r"ns=([a-zA-Z0-9_.$]+)", expand=False).fillna("")
+    out["op"] = pdf["text"].str.extract(r"op:([iudcn])", expand=False).fillna("")
     out["size"] = pdf["text"].str.encode("utf-8").str.len()
     diffs = pdf["text"].str.extract(r"diff=(\{.*?\})(?: |$)", expand=False)
 
@@ -63,21 +64,44 @@ def _pandas_parse(pdf: pd.DataFrame) -> pd.DataFrame:
     return out
 
 
-def test_parse_matches_pandas_reference(transcripts):
-    parsed = (
-        parse_transcripts(transcripts)
-        .withColumn("diff_fields", F.col("diff.diff_fields"))
-        .withColumn("total_elements", F.col("diff.total_elements"))
-        .toPandas()
+def _edge_rows(spark):
+    """Hand-built rows the generator never emits: no field markers at
+    all, multibyte text, and rows without a diff block."""
+    texts = [
+        "plain text with no field markers",
+        'ns=app.users op:u id=42 diff={"a":1,"b":[1,{"c":2}]} größe ✓',
+        "ns=app.users op:i id=7 héllo wörld",
+        "op:d only an op marker",
+    ]
+    return spark.createDataFrame(
+        [(f"e{i}", i, "user", t, None, None) for i, t in enumerate(texts)],
+        "conv_id string, turn_idx int, role string, text string, tool string, "
+        "ts timestamp",
     )
-    expected = _pandas_parse(parsed)
-    for col in ("ns", "op", "size", "diff_fields", "total_elements"):
-        pd.testing.assert_series_equal(
-            parsed[col].reset_index(drop=True),
-            expected[col].reset_index(drop=True),
-            check_names=False,
-            check_dtype=False,
+
+
+def test_parse_matches_pandas_reference(spark, transcripts):
+    for source in (transcripts, _edge_rows(spark)):
+        parsed = (
+            parse_transcripts(source)
+            .withColumn("diff_fields", F.col("diff.diff_fields"))
+            .withColumn("total_elements", F.col("diff.total_elements"))
+            .toPandas()
         )
+        expected = _pandas_parse(parsed)
+        for col in ("ns", "op", "size", "diff_fields", "total_elements"):
+            pd.testing.assert_series_equal(
+                parsed[col].reset_index(drop=True),
+                expected[col].reset_index(drop=True),
+                check_names=False,
+                check_dtype=False,
+            )
+    edge = {r["turn_idx"]: r for r in parse_transcripts(_edge_rows(spark)).collect()}
+    assert [edge[0][c] for c in ("ns", "op", "id", "sub")] == ["", "", "", ""]
+    assert (edge[3]["ns"], edge[3]["op"], edge[3]["id"]) == ("", "d", "")
+    # multibyte text: size is the byte length, not the character count
+    assert edge[1]["size"] == len(edge[1]["text"].encode()) > len(edge[1]["text"])
+    assert [tuple(edge[i]["diff"]) for i in range(4)] == [(0, 0), (2, 3), (0, 0), (0, 0)]
 
 
 def test_unwind_integer_division(spark):
@@ -253,14 +277,22 @@ def test_pipeline_file_plan_via_hadoop_fs_uri(spark, transcripts, tmp_path):
     assert a == b
 
 
-def test_file_plan_legacy_inline_checkpoint(spark, tmp_path):
-    """Pre-sidecar checkpoints inline the plan as state['file_groups'];
-    they must keep resuming unchanged."""
-    pipe = TranscriptPipeline(
-        spark, str(tmp_path / "wd_l"), T.tool_catalog(spark), num_batches=2
-    )
-    legacy = {"file_groups": [["a.parquet"], ["b.parquet"]]}
-    assert pipe._file_groups(legacy) == [["a.parquet"], ["b.parquet"]]
+def test_pipeline_rejects_inline_file_groups_checkpoint(spark, tmp_path):
+    """A checkpoint that inlines its plan as ``file_groups`` (no sidecar)
+    is no longer read.  Re-planning it would keep its completed entries
+    against a new plan and skip them, so run() raises instead."""
+    inline = {
+        "completed": {"0": {"rows_in": 1, "rows_out": 1, "path": None}},
+        "file_groups": [["a.parquet"], ["b.parquet"]],
+        "mode": "file_groups",
+        "num_batches": 2,
+    }
+    wd = tmp_path / "wd_l"
+    wd.mkdir()
+    (wd / "checkpoint.json").write_text(json.dumps(inline))
+    pipe = TranscriptPipeline(spark, str(wd), T.tool_catalog(spark), num_batches=2)
+    with pytest.raises(ValueError, match="use a fresh work_dir"):
+        pipe.run(input_path=str(tmp_path / "src"))
 
 
 def test_pipeline_resume_adopts_checkpointed_num_batches(spark, transcripts, tmp_path):
@@ -365,17 +397,6 @@ def test_unwind_parity_modes(spark):
     assert dflt == [
         ("a.b", "i", 50), ("c.d", "u", 50), ("e.f", "i", 60), ("x.y", "i", 50),
     ]
-
-
-def test_grok_udf_path_equals_native(spark, transcripts):
-    """The single-pass grok UDF path extracts identically to the native
-    per-field regexp_extract path (including no-match rows → '')."""
-    cols = ["conv_id", "turn_idx", "ns", "op", "id", "size", "sub"]
-    a = sorted(map(tuple, parse_transcripts(transcripts).select(cols).collect()))
-    b = sorted(
-        map(tuple, parse_transcripts(transcripts, grok_udf=True).select(cols).collect())
-    )
-    assert a == b
 
 
 def test_role_catalog_enrich_consistency(spark, transcripts):

@@ -86,38 +86,6 @@ def test_tail_lag_metric(spark, tmp_path):
     assert lag0 == 0
 
 
-def test_stateful_accumulator_equals_batch_and_resumes(spark, tmp_path):
-    """T6 via applyInPandasWithState: the per-(ns,op) accumulator lives as
-    operator state in the stream checkpoint; a later drain RESUMES it (T8)
-    and the cumulative report equals a full batch recompute."""
-    input_dir = str(tmp_path / "in4")
-    T.generate_transcripts(spark, num_conversations=50, seed=1).coalesce(2).write.mode(
-        "append"
-    ).parquet(input_dir)
-    tail = TailStream(spark, input_dir, str(tmp_path / "wd4"))
-    tail.run_stateful_available()
-    got1 = {
-        (r["ns"], r["op"]): (r["count"], r["total_size"], r["min_size"],
-                             r["max_size"], r["avg_size"])
-        for r in tail.stateful_report().collect()
-    }
-    assert got1 == _expected_report(spark, input_dir)
-
-    # more data arrives; the drain resumes the SAME state (not re-reading
-    # old files) yet the cumulative report matches the full recompute
-    T.generate_transcripts(spark, num_conversations=30, seed=9).coalesce(2).write.mode(
-        "append"
-    ).parquet(input_dir)
-    tail.run_stateful_available()
-    got2 = {
-        (r["ns"], r["op"]): (r["count"], r["total_size"], r["min_size"],
-                             r["max_size"], r["avg_size"])
-        for r in tail.stateful_report().collect()
-    }
-    assert got2 == _expected_report(spark, input_dir)
-    assert sum(v[0] for v in got2.values()) > sum(v[0] for v in got1.values())
-
-
 def test_tail_threshold_buckets_incremental(spark, tmp_path):
     """A3 buckets in tail mode (the reference's --thresholdBuckets on the
     tail command): bucket counters accumulate through the per-batch
