@@ -8,7 +8,8 @@ signature components agree).  Either way: across micro-batches / drains /
 restarts.  One AvailableNow drain by default (resumable — re-running picks
 up only new files via the stream checkpoint); ``--continuous`` blocks
 forever with a heartbeat and drains gracefully on SIGINT/SIGTERM or when
-``--stop-file`` appears (the run_tail shutdown contract).
+``--stop-file`` appears (``streaming/microbatch.py::run_cli``, shared with
+run_tail).
 
   spark-submit --py-files dist/oplog_analyzer_spark.zip \
     jobs/run_dedup_stream.py --input <dir> --work-dir <dir> \
@@ -24,10 +25,11 @@ forever with a heartbeat and drains gracefully on SIGINT/SIGTERM or when
 from __future__ import annotations
 
 import argparse
-import os
 
 
 def main() -> None:
+    from oplog_analyzer_spark.streaming.microbatch import parse_stream_args, run_cli
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
     ap.add_argument("--work-dir", required=True)
@@ -51,19 +53,7 @@ def main() -> None:
     ap.add_argument("--hash", choices=["md5", "xxhash64"],
                     help="signature hash family (neardup; default md5, "
                     "the SQL-certifiable form)")
-    ap.add_argument("--continuous", action="store_true",
-                    help="forever mode: processingTime trigger, heartbeat, "
-                    "graceful drain on SIGINT/SIGTERM/--stop-file")
-    ap.add_argument("--processing-time", default="5 seconds")
-    ap.add_argument("--heartbeat-sec", type=float, default=30.0)
-    ap.add_argument("--stop-file",
-                    help="drain when this path appears (spark-submit "
-                    "launches where the parent JVM owns SIGINT)")
-    args = ap.parse_args()
-    for flag in ("--processing-time", "--heartbeat-sec", "--stop-file"):
-        dest = flag.lstrip("-").replace("-", "_")
-        if not args.continuous and ap.get_default(dest) != getattr(args, dest):
-            ap.error(f"{flag} only applies with --continuous")
+    args = parse_stream_args(ap)
     for flag in ("--num-hashes", "--bands", "--min-match", "--shingle-n",
                  "--hash"):
         dest = flag.lstrip("-").replace("-", "_")
@@ -101,10 +91,7 @@ def main() -> None:
             schema=args.schema or DOCS_SCHEMA,
         )
 
-    if args.continuous:
-        _run_continuous(stream, args)
-    else:
-        stream.run_available()
+    run_cli(stream, args)
 
     if args.mode == "neardup":
         v = stream.verdicts()
@@ -143,46 +130,6 @@ def main() -> None:
         .orderBy(F.desc("dup_count"), F.asc("keep_id"))
         .limit(top_dups)
     ))
-
-
-def _run_continuous(stream, args) -> None:
-    """run_tail's 3-stage graceful shutdown, verbatim contract: the handler
-    sets a flag; query.stop() runs on the main thread."""
-    import signal
-    import time
-
-    q = stream.run_continuous(processing_time=args.processing_time)
-    stop_requested = {"flag": False}
-
-    def _request_stop(signum, frame):  # noqa: ARG001
-        stop_requested["flag"] = True
-
-    prev_int = signal.signal(signal.SIGINT, _request_stop)
-    prev_term = signal.signal(signal.SIGTERM, _request_stop)
-    try:
-        print(f"dedup-tailing {stream.input_dir} (trigger every "
-              f"{args.processing_time}; Ctrl-C to drain and report)",
-              flush=True)
-        last_beat = time.monotonic()
-
-        def stop_file_present() -> bool:
-            return bool(args.stop_file) and os.path.exists(args.stop_file)
-
-        while q.isActive and not stop_requested["flag"] and not stop_file_present():
-            time.sleep(0.2)
-            now = time.monotonic()
-            if now - last_beat >= args.heartbeat_sec:
-                last_beat = now
-                p = q.lastProgress
-                rows = p["numInputRows"] if p else 0
-                bid = p["batchId"] if p else "-"
-                print(f"[heartbeat] batch={bid} rows_in_last_batch={rows}",
-                      flush=True)
-        q.stop()
-        q.awaitTermination()
-    finally:
-        signal.signal(signal.SIGINT, prev_int)
-        signal.signal(signal.SIGTERM, prev_term)
 
 
 if __name__ == "__main__":

@@ -16,12 +16,14 @@ configuration is pinned in work_dir/tail_meta.json).
     [--dump [--dump-with-shard]] \
     [--id-stats [--id-stats-threshold N] [--top-ids K] [--doc-sizes <dir>]] \
     [--buckets 1000,10000] [--lag-wallclock "ts"] \
-    [--continuous [--processing-time "5 seconds"] [--heartbeat-sec 30]]
+    [--continuous [--processing-time "5 seconds"] [--heartbeat-sec 30] \
+     [--stop-file <path>]]
 
 ``--continuous`` is the reference's actual runtime behavior: block forever
 polling for new entries, report on a heartbeat, and drain gracefully on
-SIGINT/SIGTERM.  Without it, one AvailableNow drain runs (the resumable
-incremental-batch form certified by the driver rows).
+SIGINT/SIGTERM or the stop file (``streaming/microbatch.py::run_cli``).
+Without it, one AvailableNow drain runs (the resumable incremental-batch
+form certified by the driver rows).
 """
 
 from __future__ import annotations
@@ -31,6 +33,8 @@ import os
 
 
 def main() -> None:
+    from oplog_analyzer_spark.streaming.microbatch import parse_stream_args, run_cli
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
     ap.add_argument("--work-dir", required=True)
@@ -89,30 +93,6 @@ def main() -> None:
         "missing documents get the -1 sentinel "
         "(TailCommand.java:398-463)",
     )
-    ap.add_argument(
-        "--continuous", action="store_true",
-        help="T1/T5 full parity: keep tailing forever (processingTime "
-        "trigger) instead of draining once; SIGINT/SIGTERM triggers the "
-        "graceful 3-stage shutdown (stop accepting batches → await "
-        "termination → final merged report), the reference's forever-tail "
-        "loop + shutdown (TailCommand.java:546, 817-921)",
-    )
-    ap.add_argument("--processing-time", default="5 seconds",
-                    help="micro-batch poll interval for --continuous")
-    ap.add_argument(
-        "--heartbeat-sec", type=float, default=30.0,
-        help="with --continuous: print a one-line progress heartbeat this "
-        "often (the reference's 30 s reporter, TailCommand.java:750-763)",
-    )
-    ap.add_argument(
-        "--stop-file",
-        help="with --continuous: also drain gracefully when this marker "
-        "file appears.  The signal path only reaches this driver when "
-        "python IS the signalled process (direct `python jobs/run_tail.py`"
-        " — pyspark's gateway JVM ignores SIGINT); under spark-submit the "
-        "parent JVM owns the default SIGINT disposition and dies first, "
-        "so cluster launchers should drain via the marker file instead",
-    )
     ap.add_argument("--lag-wallclock", help="report lag vs this wallclock (P8/T4)")
     ap.add_argument(
         "--buckets",
@@ -120,7 +100,7 @@ def main() -> None:
         "accumulator (A3, the reference's --thresholdBuckets in tail "
         "mode); part of the partials schema — pinned per work-dir",
     )
-    args = ap.parse_args()
+    args = parse_stream_args(ap)
 
     from oplog_analyzer_spark.operators.display import console_report
     from oplog_analyzer_spark.session import get_spark
@@ -151,10 +131,7 @@ def main() -> None:
         ),
         n_shards=args.shards,
     )
-    if args.continuous:
-        _run_continuous(tail, args)
-    else:
-        tail.run_available()
+    run_cli(tail, args)
     print(console_report(tail.report()))
     if args.threshold is not None:
         print(f"\n--- OPS >= {args.threshold} B (F5 side output, cumulative) ---")
@@ -172,64 +149,6 @@ def main() -> None:
             print(console_report(tail.lag_seconds(args.lag_wallclock)))
         else:
             print("lag: no micro-batch has run yet")
-
-
-def _run_continuous(tail, args) -> None:
-    """The forever-tail loop: start the processingTime query, heartbeat
-    every --heartbeat-sec from StreamingQueryProgress, and on SIGINT /
-    SIGTERM perform the reference's 3-stage graceful shutdown
-    (TailCommand.java:817-921): (1) stop accepting new micro-batches
-    (query.stop()), (2) await termination of the in-flight batch, (3) the
-    caller prints the final merged report.  The handler only sets a flag —
-    query.stop() runs on the main thread, not inside the signal frame."""
-    import signal
-    import time
-
-    q = tail.run_continuous(processing_time=args.processing_time)
-    stop_requested = {"flag": False}
-
-    def _request_stop(signum, frame):  # noqa: ARG001
-        stop_requested["flag"] = True
-
-    prev_int = signal.signal(signal.SIGINT, _request_stop)
-    prev_term = signal.signal(signal.SIGTERM, _request_stop)
-    try:
-        last_beat = time.monotonic()
-        print(f"tailing {tail.input_dir} (trigger every "
-              f"{args.processing_time}; Ctrl-C to drain and report)",
-              flush=True)
-
-        def stop_file_present() -> bool:
-            return bool(args.stop_file) and os.path.exists(args.stop_file)
-
-        seen_batch, run_rows = -1, 0
-        while q.isActive and not stop_requested["flag"] and not stop_file_present():
-            time.sleep(0.2)
-            p = q.lastProgress
-            if p and p["batchId"] != seen_batch:
-                seen_batch = p["batchId"]
-                run_rows += p["numInputRows"]
-            now = time.monotonic()
-            if now - last_beat >= args.heartbeat_sec:
-                last_beat = now
-                # the reference's 30 s reporter prints entries processed +
-                # lag (TailCommand.java:750-763); rows here are this RUN's
-                # (the cumulative report spans resumes and prints at drain)
-                rows = p["numInputRows"] if p else 0
-                bid = p["batchId"] if p else "-"
-                print(
-                    f"heartbeat: batch={bid} rows_in_last_batch={rows} "
-                    f"rows_this_run={run_rows}",
-                    flush=True,
-                )
-        print("stopping tail (graceful drain)...", flush=True)
-        q.stop()
-        q.awaitTermination()
-        if q.exception() is not None:
-            raise q.exception()
-    finally:
-        signal.signal(signal.SIGINT, prev_int)
-        signal.signal(signal.SIGTERM, prev_term)
 
 
 if __name__ == "__main__":

@@ -71,13 +71,14 @@ def _under_spark_submit() -> bool:
 
 
 def _resolve_master(master: str | None) -> str | None:
-    """None ⇒ inherit the launcher's master (spark-submit) or default to
-    ``local[$SPARK_GRAFT_CPUS]`` when self-launched (tests, bench)."""
+    """None ⇒ inherit the launcher's master (spark-submit) or, when
+    self-launched (tests, bench), default to ``local[$SPARK_GRAFT_CPUS]``,
+    else ``local[<cores this process may run on>]``."""
     if master is not None:
         return master
     if _under_spark_submit():
         return None
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
     return f"local[{cpus}]"
 
 
@@ -114,9 +115,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's scale settings.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, then 32) when
-    self-launched; under spark-submit (detected via the py4j gateway env)
-    ``master=None`` inherits the launcher's ``--master`` untouched.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, then the
+    host's usable cores) when self-launched; under spark-submit (detected
+    via the py4j gateway env) ``master=None`` inherits the launcher's
+    ``--master`` untouched.
     """
     # Executor Python workers must be able to import this package (the
     # pandas UDFs pickle by reference).  Local mode: workers inherit the

@@ -1,6 +1,8 @@
-"""Streaming deduplication — exact (:class:`DedupStream`) and near-dup
-(:class:`NearDupStream`, minhash/LSH) admission across an unbounded
-document feed.
+"""Streaming deduplication — exact (:class:`DedupStream`), minhash/LSH
+near-dup (:class:`NearDupStream`) and embedding near-dup
+(:class:`EmbNearDupStream`) admission across an unbounded feed, on the
+shared micro-batch protocol (``streaming/microbatch.py``: source, drain
+and continuous triggers, checkpoint resume, meta pin, graceful stop).
 
 The batch §2.11 family dedups a bounded corpus; a continuously-ingesting
 training pipeline needs the STREAMING form: documents arrive in micro-
@@ -13,9 +15,7 @@ Design — merge-safe partials, the same algebra the tail accumulator uses
 
   per batch   one hash aggregate of the micro-batch:
                 (text_hash, min_id within batch, count)
-              written to its own ``batch_id=<k>/`` partition with
-              overwrite — at-least-once foreachBatch replays become no-op
-              rewrites (the tail idempotence contract);
+              written to its own ``batch_id=<k>/`` partition;
   admitted()  one aggregate over the partials: per hash the winner is
               min(struct(batch_id, min_id)) — FIRST batch that saw the
               hash wins, ties inside a batch to the smaller id — plus the
@@ -46,11 +46,12 @@ design (SURVEY §2.11).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .microbatch import MicroBatchStream
 
 #: default feed schema — the documents table shape
 DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
@@ -59,44 +60,27 @@ DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars lon
 EMB_SCHEMA = "vec_id long, embedding array<float>, label int"
 
 
-def _pin_meta(work_dir: str, filename: str, fields, obj, kind: str) -> None:
-    """Pin the meaning-defining options in ``work_dir/filename`` at
-    creation; a resume with different options raises — merging partials
-    computed under different semantics would silently change what
-    'duplicate' means (the tail_meta contract, shared by all streams)."""
-    path = os.path.join(work_dir, filename)
-    mine = {k: getattr(obj, k) for k in fields}
-    if os.path.exists(path):
-        with open(path) as f:
-            pinned = json.load(f)
-        diffs = {
-            k: (pinned.get(k), mine[k])
-            for k in fields
-            if pinned.get(k) != mine[k]
-        }
-        if diffs:
-            raise ValueError(
-                f"work_dir {work_dir} was created with a different "
-                f"{kind} configuration (use a fresh work_dir): {diffs}"
-            )
-        return
-    os.makedirs(work_dir, exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(mine, f, indent=1, sort_keys=True)
-    os.replace(tmp, path)
+def _verdicts(index: DataFrame, rejects: DataFrame) -> DataFrame:
+    """``(id, batch_id, admitted)`` for every id in a near-dup stream's
+    index: one anti-join-shaped left join against the append-only reject
+    set."""
+    rej = rejects.select("id").distinct().withColumn("__rej", F.lit(1))
+    return index.select("id", "batch_id").join(rej, "id", "left").select(
+        "id", "batch_id", F.col("__rej").isNull().alias("admitted")
+    )
 
 
-class DedupStream:
+class DedupStream(MicroBatchStream):
     """Resumable streaming exact-dedup over a growing parquet directory.
 
     ``work_dir`` holds the stream checkpoint and the cumulative partials;
-    the meaning-defining options (id/text column, normalization) are pinned
-    in ``dedup_meta.json`` at creation and a resume with different options
-    raises (the tail_meta contract — merging partials computed under a
-    different normalization would silently change what "duplicate" means).
+    the meaning-defining options (id/text column, feed schema) are pinned
+    in ``dedup_meta.json``: merging partials computed under a different
+    normalization would silently change what "duplicate" means.
     """
 
+    _META_FILE = "dedup_meta.json"
+    _META_KIND = "dedup-stream"
     _META_FIELDS = ("id_col", "text_col", "schema")
 
     def __init__(
@@ -109,20 +93,13 @@ class DedupStream:
         schema: str = DOCS_SCHEMA,
         max_files_per_trigger: int = 8,
     ) -> None:
-        self.spark = spark
-        self.input_dir = input_dir
-        self.work_dir = work_dir
+        super().__init__(spark, input_dir, work_dir)
         self.id_col = id_col
         self.text_col = text_col
         self.schema = schema
         self.max_files_per_trigger = int(max_files_per_trigger)
-        self.checkpoint_dir = os.path.join(work_dir, "checkpoint")
         self.partials_dir = os.path.join(work_dir, "partials")
-        self._enforce_meta()
-
-    def _enforce_meta(self) -> None:
-        _pin_meta(self.work_dir, "dedup_meta.json", self._META_FIELDS,
-                  self, "dedup-stream")
+        self._pin_meta({k: getattr(self, k) for k in self._META_FIELDS})
 
     # -- per-batch transform ---------------------------------------------
     def _hash_col(self) -> F.Column:
@@ -153,56 +130,15 @@ class DedupStream:
             os.path.join(self.partials_dir, f"batch_id={batch_id}")
         )
 
-    # -- drains ------------------------------------------------------------
-    def _source(self) -> DataFrame:
-        return (
-            self.spark.readStream.schema(self.schema)
-            .option("maxFilesPerTrigger", self.max_files_per_trigger)
-            .parquet(self.input_dir)
-        )
-
-    def run_available(self) -> None:
-        """Drain all currently-available input (Trigger.AvailableNow) then
-        stop; a fresh DedupStream over the same work_dir later drains only
-        the delta (checkpointed source offsets)."""
-        q = (
-            self._source()
-            .writeStream.foreachBatch(self._sink_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    def run_continuous(self, processing_time: str = "5 seconds"):
-        """Forever-running form (processingTime trigger); caller owns
-        ``query.stop()`` — same handoff contract as TailStream: the two
-        trigger modes share one checkpoint, so drains and continuous runs
-        interleave freely."""
-        return (
-            self._source()
-            .writeStream.foreachBatch(self._sink_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(processingTime=processing_time)
-            .start()
-        )
-
     # -- cumulative reports --------------------------------------------------
-    def _read_partials(self) -> DataFrame:
-        if not os.path.isdir(self.partials_dir):
-            return self.spark.createDataFrame(
-                [], "text_hash string, min_id long, cnt long, batch_id long"
-            )
-        return self.spark.read.option("basePath", self.partials_dir).parquet(
-            os.path.join(self.partials_dir, "batch_id=*")
-        )
-
     def admitted(self) -> DataFrame:
         """Cumulative admission table: ``(text_hash, keep_id, dup_count,
         first_batch_id)`` — one row per distinct text seen so far.  One
         aggregate over the group-count-sized partials; min(struct) picks
         the earliest batch, then the smallest id within it."""
-        p = self._read_partials()
+        p = self._read_batches(
+            self.partials_dir, "text_hash string, min_id long, cnt long, batch_id long"
+        )
         win = F.min(F.struct("batch_id", "min_id")).alias("w")
         return (
             p.groupBy("text_hash")
@@ -221,7 +157,7 @@ class DedupStream:
         return self.admitted().filter(F.col("dup_count") > 1)
 
 
-class NearDupStream:
+class NearDupStream(MicroBatchStream):
     """Resumable streaming NEAR-dup dedup — MinHash/LSH admission over a
     growing parquet feed: a document is rejected iff some PREDECESSOR
     (earlier micro-batch, or a smaller id within the same batch) shares an
@@ -240,12 +176,11 @@ class NearDupStream:
     the stream incremental:
 
       per batch   signatures + band buckets for the batch are written to
-                  their own ``batch_id=<k>/`` index partitions (overwrite:
-                  at-least-once foreachBatch replays are no-op rewrites),
-                  then ONE join of the batch's buckets against the
-                  cumulative index (plus the within-batch self-join)
-                  verifies candidates by signature match-count and appends
-                  the batch's rejects — batch × cumulative, never
+                  their own ``batch_id=<k>/`` index partitions, then ONE
+                  join of the batch's buckets against the cumulative
+                  index (plus the within-batch self-join) verifies
+                  candidates by signature match-count and appends the
+                  batch's rejects — batch × cumulative, never
                   cumulative × cumulative;
       admitted()  one anti-join of the id index against the reject set.
 
@@ -265,6 +200,8 @@ class NearDupStream:
     semantics — beyond-reference by design, like :class:`DedupStream`.
     """
 
+    _META_FILE = "neardup_meta.json"
+    _META_KIND = "near-dup-stream"
     _META_FIELDS = (
         "id_col", "text_col", "schema", "num_hashes", "bands",
         "min_match", "shingle_n", "hash_fn",
@@ -289,9 +226,7 @@ class NearDupStream:
             raise ValueError("min_match must be in [1, num_hashes]")
         if num_hashes % bands != 0:
             raise ValueError("bands must divide num_hashes")
-        self.spark = spark
-        self.input_dir = input_dir
-        self.work_dir = work_dir
+        super().__init__(spark, input_dir, work_dir)
         self.id_col = id_col
         self.text_col = text_col
         self.schema = schema
@@ -301,23 +236,10 @@ class NearDupStream:
         self.shingle_n = int(shingle_n)
         self.hash_fn = hash_fn
         self.max_files_per_trigger = int(max_files_per_trigger)
-        self.checkpoint_dir = os.path.join(work_dir, "checkpoint")
         self.sigs_dir = os.path.join(work_dir, "sigs")
         self.buckets_dir = os.path.join(work_dir, "buckets")
         self.rejects_dir = os.path.join(work_dir, "rejects")
-        self._enforce_meta()
-
-    def _enforce_meta(self) -> None:
-        _pin_meta(self.work_dir, "neardup_meta.json", self._META_FIELDS,
-                  self, "near-dup-stream")
-
-    # -- per-batch transform ---------------------------------------------
-    def _read_index(self, base_dir: str, empty_schema: str) -> DataFrame:
-        if not os.path.isdir(base_dir):
-            return self.spark.createDataFrame([], empty_schema)
-        return self.spark.read.option("basePath", base_dir).parquet(
-            os.path.join(base_dir, "batch_id=*")
-        )
+        self._pin_meta({k: getattr(self, k) for k in self._META_FIELDS})
 
     def _sink_batch(self, batch: DataFrame, batch_id: int) -> None:
         from ..functions.dedup import (
@@ -344,10 +266,10 @@ class NearDupStream:
                 os.path.join(self.buckets_dir, f"batch_id={batch_id}")
             )
 
-            prev_b = self._read_index(
+            prev_b = self._read_batches(
                 self.buckets_dir, "id long, band int, bucket string, batch_id long"
             ).filter(F.col("batch_id") < batch_id)
-            prev_s = self._read_index(
+            prev_s = self._read_batches(
                 self.sigs_dir, "id long, sig array<long>, batch_id long"
             ).filter(F.col("batch_id") < batch_id)
 
@@ -396,54 +318,13 @@ class NearDupStream:
         finally:
             sigs.unpersist()
 
-    # -- drains ------------------------------------------------------------
-    def _source(self) -> DataFrame:
-        return (
-            self.spark.readStream.schema(self.schema)
-            .option("maxFilesPerTrigger", self.max_files_per_trigger)
-            .parquet(self.input_dir)
-        )
-
-    def run_available(self) -> None:
-        """Drain all currently-available input (Trigger.AvailableNow) then
-        stop; a fresh NearDupStream over the same work_dir later drains
-        only the delta (checkpointed source offsets)."""
-        q = (
-            self._source()
-            .writeStream.foreachBatch(self._sink_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    def run_continuous(self, processing_time: str = "5 seconds"):
-        """Forever-running form; caller owns ``query.stop()`` — drains and
-        continuous runs share one checkpoint and interleave freely."""
-        return (
-            self._source()
-            .writeStream.foreachBatch(self._sink_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(processingTime=processing_time)
-            .start()
-        )
-
     # -- cumulative reports --------------------------------------------------
     def verdicts(self) -> DataFrame:
         """Cumulative per-doc verdicts: ``(id, batch_id, admitted)`` for
-        every document seen so far.  One anti-join-shaped left join of the
-        id index against the append-only reject set."""
-        ids = self._read_index(
-            self.sigs_dir, "id long, sig array<long>, batch_id long"
-        ).select("id", "batch_id")
-        rejects = (
-            self._read_index(self.rejects_dir, "id long, batch_id long")
-            .select("id")
-            .distinct()
-            .withColumn("__rej", F.lit(1))
-        )
-        return ids.join(rejects, "id", "left").select(
-            "id", "batch_id", F.col("__rej").isNull().alias("admitted")
+        every document seen so far."""
+        return _verdicts(
+            self._read_batches(self.sigs_dir, "id long, sig array<long>, batch_id long"),
+            self._read_batches(self.rejects_dir, "id long, batch_id long"),
         )
 
     def admitted(self) -> DataFrame:
@@ -451,7 +332,7 @@ class NearDupStream:
         return self.verdicts().filter("admitted").select("id", "batch_id")
 
 
-class EmbNearDupStream:
+class EmbNearDupStream(MicroBatchStream):
     """Resumable streaming near-dup dedup over an EMBEDDING feed — the
     third cell of the streaming × dedup matrix (exact text, minhash text,
     embedding cosine): reject a vector iff a PREDECESSOR (earlier batch,
@@ -473,6 +354,8 @@ class EmbNearDupStream:
     other streams.
     """
 
+    _META_FILE = "embdedup_meta.json"
+    _META_KIND = "embedding-near-dup-stream"
     _META_FIELDS = (
         "id_col", "vec_col", "schema", "threshold", "n_planes",
         "n_tables", "multiprobe", "dim", "seed",
@@ -496,9 +379,7 @@ class EmbNearDupStream:
     ) -> None:
         if not (0.0 < threshold <= 1.0):
             raise ValueError("threshold must be in (0, 1]")
-        self.spark = spark
-        self.input_dir = input_dir
-        self.work_dir = work_dir
+        super().__init__(spark, input_dir, work_dir)
         self.id_col = id_col
         self.vec_col = vec_col
         self.schema = schema
@@ -509,22 +390,10 @@ class EmbNearDupStream:
         self.dim = int(dim)
         self.seed = int(seed)
         self.max_files_per_trigger = int(max_files_per_trigger)
-        self.checkpoint_dir = os.path.join(work_dir, "checkpoint")
         self.vecs_dir = os.path.join(work_dir, "vecs")
         self.buckets_dir = os.path.join(work_dir, "buckets")
         self.rejects_dir = os.path.join(work_dir, "rejects")
-        self._enforce_meta()
-
-    def _enforce_meta(self) -> None:
-        _pin_meta(self.work_dir, "embdedup_meta.json", self._META_FIELDS,
-                  self, "embedding-near-dup-stream")
-
-    def _read_index(self, base_dir: str, empty_schema: str) -> DataFrame:
-        if not os.path.isdir(base_dir):
-            return self.spark.createDataFrame([], empty_schema)
-        return self.spark.read.option("basePath", base_dir).parquet(
-            os.path.join(base_dir, "batch_id=*")
-        )
+        self._pin_meta({k: getattr(self, k) for k in self._META_FIELDS})
 
     def _sink_batch(self, batch: DataFrame, batch_id: int) -> None:
         from ..functions.similarity import (
@@ -550,10 +419,10 @@ class EmbNearDupStream:
                 os.path.join(self.buckets_dir, f"batch_id={batch_id}")
             )
 
-            prev_b = self._read_index(
+            prev_b = self._read_batches(
                 self.buckets_dir, "id long, table int, bucket int, batch_id long"
             ).filter(F.col("batch_id") < batch_id)
-            prev_v = self._read_index(
+            prev_v = self._read_batches(
                 self.vecs_dir, "id long, v array<double>, batch_id long"
             ).filter(F.col("batch_id") < batch_id)
 
@@ -608,45 +477,11 @@ class EmbNearDupStream:
         finally:
             norm.unpersist()
 
-    def _source(self) -> DataFrame:
-        return (
-            self.spark.readStream.schema(self.schema)
-            .option("maxFilesPerTrigger", self.max_files_per_trigger)
-            .parquet(self.input_dir)
-        )
-
-    def run_available(self) -> None:
-        q = (
-            self._source()
-            .writeStream.foreachBatch(self._sink_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    def run_continuous(self, processing_time: str = "5 seconds"):
-        return (
-            self._source()
-            .writeStream.foreachBatch(self._sink_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(processingTime=processing_time)
-            .start()
-        )
-
     def verdicts(self) -> DataFrame:
         """Cumulative per-vector verdicts: ``(id, batch_id, admitted)``."""
-        ids = self._read_index(
-            self.vecs_dir, "id long, v array<double>, batch_id long"
-        ).select("id", "batch_id")
-        rejects = (
-            self._read_index(self.rejects_dir, "id long, batch_id long")
-            .select("id")
-            .distinct()
-            .withColumn("__rej", F.lit(1))
-        )
-        return ids.join(rejects, "id", "left").select(
-            "id", "batch_id", F.col("__rej").isNull().alias("admitted")
+        return _verdicts(
+            self._read_batches(self.vecs_dir, "id long, v array<double>, batch_id long"),
+            self._read_batches(self.rejects_dir, "id long, batch_id long"),
         )
 
     def admitted(self) -> DataFrame:

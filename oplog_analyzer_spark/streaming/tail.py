@@ -1,18 +1,16 @@
-"""Structured-Streaming tail analog (T1–T8).
+"""Structured-Streaming tail analog (T1–T8) on the shared micro-batch
+protocol (``streaming/microbatch.py``: source, drain and continuous
+triggers, checkpoint resume, meta pin, graceful stop).
 
 The reference tails the oplog with a blocking tailable-await cursor per
 shard (TailCommand.java:534-547), accumulating per-(ns,op) stats in memory
 and reporting every 30 s (TailCommand.java:750-763).  Spark mapping:
 
-  T1 unbounded source   → file-source readStream on the transcript
-                          directory (new files = new oplog entries); on a
-                          real deployment the same code binds to a Kafka /
-                          Iceberg-streaming source — only ``readStream``
-                          changes.
+  T1 unbounded source   → the file source on the transcript directory.
   T2 start offset       → checkpointed source offsets (startingTimestamp
                           analog); Spark tracks them per file/partition.
   T3 heartbeat          → StreamingQueryProgress + the metrics sink written
-                          by foreachBatch.
+                          per micro-batch.
   T5 graceful drain     → query.stop() + idempotent final aggregate from
                           the cumulative state table.
   T6 stateful op        → cumulative aggregates maintained exactly by
@@ -20,21 +18,13 @@ and reporting every 30 s (TailCommand.java:750-763).  Spark mapping:
                           sums/mins/maxes merge associatively — the same
                           algebra as EntryAccumulator.merge(),
                           EntryAccumulator.java:210-228).
-  T8 resume             → the stream checkpoint directory; the reference
-                          has no cross-restart resume (TailCommand.java:540)
-                          — this is the north_rule extension.  foreachBatch
-                          is at-least-once, so the partial/metrics sinks are
-                          per-batch_id overwrites (replay-idempotent — see
-                          _sink_batch).
-
-``Trigger.AvailableNow`` drains everything present and stops — giving the
-bounded-prefix semantics the reference produces at each report, and making
-the operation testable and idempotent.
+  T8 resume             → the stream checkpoint; the reference has no
+                          cross-restart resume (TailCommand.java:540) —
+                          this is the north_rule extension.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,13 +33,14 @@ from pyspark.sql import functions as F
 from ..operators import filters as FL
 from ..operators.filters import exclude_system_namespaces
 from ..operators.parse import parse_transcripts
+from .microbatch import MicroBatchStream
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
 )
 
 
-class TailStream:
+class TailStream(MicroBatchStream):
     """Incrementally tail a growing transcript directory, maintaining the
     cumulative ns::op accumulator report across micro-batches.
 
@@ -65,6 +56,11 @@ class TailStream:
     with the reference's -1 "unknown" sentinel when the document is
     missing (TailCommand.java:398-463; IdStatisticsManager.java:38-90).
     """
+
+    schema = TRANSCRIPT_SCHEMA
+    max_files_per_trigger = 8
+    _META_FILE = "tail_meta.json"
+    _META_KIND = "tail"
 
     #: options that define the MEANING of the cumulative partials; pinned
     #: in work_dir/tail_meta.json at creation and enforced on resume
@@ -106,11 +102,9 @@ class TailStream:
         partial sums, merged like every other counter.
 
         Every option above changes what the cumulative tables MEAN, so the
-        full set is written to ``work_dir/tail_meta.json`` when the
-        work_dir is created and a resume with a different configuration
-        raises — the reference has no resume at all (TailCommand.java:540),
-        so the only faithful resume is one that continues the exact same
-        job.
+        full set is pinned in ``work_dir/tail_meta.json``: the reference has
+        no resume at all (TailCommand.java:540), so the only faithful
+        resume is one that continues the exact same job.
 
         ``shard_index`` filters the synthesized shard space directly
         (shard = xxhash64(conv_id) % n_shards, ids 0..n_shards-1): the
@@ -118,9 +112,7 @@ class TailStream:
         ONCE at startup (TailCommand.java:966-989), and with a synthesized
         0..n-1 id space position == id; resolving per micro-batch would
         make the filter time-varying as shards appear."""
-        self.spark = spark
-        self.input_dir = input_dir
-        self.work_dir = work_dir
+        super().__init__(spark, input_dir, work_dir)
         self.buckets = tuple(int(b) for b in buckets)
         self.include_namespaces = list(include_namespaces or [])
         self.include_ops = list(include_ops or [])
@@ -142,14 +134,13 @@ class TailStream:
             raise ValueError("dump_with_shard requires dump=True (--dump)")
         if self.full_document and self.threshold is None:
             raise ValueError("full_document requires a threshold (--threshold)")
-        self.checkpoint_dir = os.path.join(work_dir, "checkpoint")
         self.partials_dir = os.path.join(work_dir, "partials")
         self.metrics_dir = os.path.join(work_dir, "metrics")
         self.id_partials_dir = os.path.join(work_dir, "id_partials")
         self.over_partials_dir = os.path.join(work_dir, "over_partials")
         self.over_rows_dir = os.path.join(work_dir, "over_rows")
         self.dump_dir = os.path.join(work_dir, "dump")
-        self._enforce_meta()
+        self._pin_meta(self._meta())
 
     # -- configuration pinning ---------------------------------------------
     def _doc_sizes_fingerprint(self) -> int | None:
@@ -172,42 +163,6 @@ class TailStream:
         m["buckets"] = list(self.buckets)
         m["doc_sizes_fingerprint"] = self._doc_sizes_fingerprint()
         return m
-
-    def _enforce_meta(self) -> None:
-        """Pin the accumulator-defining options at work_dir creation;
-        raise on resume mismatch instead of silently merging partials with
-        different meanings (e.g. missing gt_* bucket columns surfacing as
-        nulls).  A work_dir without a meta file pins the current
-        configuration."""
-        path = os.path.join(self.work_dir, "tail_meta.json")
-        mine = self._meta()
-        if os.path.exists(path):
-            with open(path) as f:
-                pinned = json.load(f)
-            diffs = {
-                k: (pinned.get(k), mine[k])
-                for k in self._META_FIELDS
-                if pinned.get(k) != mine[k]
-            }
-            if diffs:
-                raise ValueError(
-                    f"work_dir {self.work_dir} was created with a different "
-                    f"tail configuration; changing it mid-stream corrupts "
-                    f"the cumulative tables (use a fresh work_dir): {diffs}"
-                )
-            return
-        os.makedirs(self.work_dir, exist_ok=True)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(mine, f, indent=1, sort_keys=True)
-        os.replace(tmp, path)  # atomic publish
-
-    def _source(self) -> DataFrame:
-        return (
-            self.spark.readStream.schema(TRANSCRIPT_SCHEMA)
-            .option("maxFilesPerTrigger", 8)
-            .parquet(self.input_dir)
-        )
 
     # -- per-batch transforms ------------------------------------------------
     def _apply_filters(self, parsed: DataFrame) -> DataFrame:
@@ -263,13 +218,9 @@ class TailStream:
         return id_stats(src, doc_size_col=doc_col)
 
     def _sink_batch(self, batch: DataFrame, batch_id: int) -> None:
-        """Idempotent micro-batch sink.  foreachBatch is at-least-once: a
-        crash after the write but before the stream's offset commit REPLAYS
-        the batch with the SAME batch_id on resume.  Writing each batch to
-        its own ``batch_id=<k>/`` partition with overwrite makes the replay
-        a no-op rewrite instead of an append that report() would
-        double-count — the same idempotence contract for EVERY sink below
-        (dump, id partials, threshold side-output).
+        """Idempotent micro-batch sink: EVERY sink below (partials,
+        metrics, dump, id partials, threshold side-output) overwrites its
+        own ``batch_id=<k>/`` dir, so a replayed batch is a no-op rewrite.
 
         Single scan per micro-batch (VERDICT r02 #4): the filtered parse is
         computed once; when only the accumulator runs, the group-count-sized
@@ -327,56 +278,6 @@ class TailStream:
             if row_sinks:
                 base.unpersist()
 
-    def run_available(self) -> None:
-        """Drain all currently-available input (Trigger.AvailableNow), then
-        stop — one resumable increment of the unbounded tail."""
-        q = (
-            self._source()
-            .writeStream.foreachBatch(self._sink_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    def run_continuous(self, processing_time: str = "5 seconds"):
-        """T1/T5 full parity: the forever-running tail.  The reference
-        flagship blocks on a tailable-await cursor indefinitely
-        (TailCommand.java:546); this is the same loop as a processingTime
-        trigger over the same source/sink/checkpoint as ``run_available``
-        — the query keeps polling ``input_dir`` for new files every
-        ``processing_time`` until the caller stops it, and because the two
-        triggers share the checkpoint, a drain can hand off to a continuous
-        run (and back) without reprocessing.
-
-        Returns the running ``StreamingQuery``; the caller owns the stop.
-        ``jobs/run_tail.py --continuous`` wires SIGINT/SIGTERM →
-        ``query.stop()`` → final merged report, the analog of the
-        reference's 3-stage graceful shutdown (TailCommand.java:817-921).
-        ``query.stop()`` interrupts between (or mid-) micro-batches;
-        foreachBatch is at-least-once, and every sink is a per-batch_id
-        overwrite, so an interrupted batch is replayed idempotently on the
-        next start — report() stays exact across any stop point."""
-        return (
-            self._source()
-            .writeStream.foreachBatch(self._sink_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(processingTime=processing_time)
-            .start()
-        )
-
-    def _read_partials(self, base_dir: str, empty_schema: str) -> DataFrame | None:
-        """Read the per-batch partial parquets, or return an empty frame
-        with the partials schema when NO micro-batch ever ran (fresh/empty
-        input dir → foreachBatch never fires → the directory is absent;
-        ADVICE r05: the reports must then print empty, exactly like a
-        zero-row batch pass, instead of raising on the missing glob)."""
-        if not os.path.isdir(base_dir):
-            return self.spark.createDataFrame([], empty_schema)
-        return self.spark.read.option("basePath", base_dir).parquet(
-            os.path.join(base_dir, "batch_id=*")
-        )
-
     def _partials_schema(self, with_buckets: bool = True) -> str:
         s = (
             "ns string, op string, count bigint, total_size bigint, "
@@ -386,11 +287,10 @@ class TailStream:
             s += "".join(f", gt_{b} bigint" for b in self.buckets)
         return s
 
-    def report(self) -> DataFrame:
-        """Cumulative A1 report: final merge of all batch partials — the
-        same partial/final algebra as the reference's mergeShardResults
-        (TailCommand.java:1103-1146), with floor-avg display parity."""
-        partials = self._read_partials(self.partials_dir, self._partials_schema())
+    def _merged(self, base_dir: str, with_buckets: bool) -> DataFrame:
+        """Final merge of one sink's (ns,op) partials, floor-avg display
+        parity."""
+        partials = self._read_batches(base_dir, self._partials_schema(with_buckets))
         aggs = [
             F.sum("count").alias("count"),
             F.sum("total_size").alias("total_size"),
@@ -398,12 +298,18 @@ class TailStream:
             F.max("max_size").alias("max_size"),
             F.max("latest_ts").alias("latest_ts"),
         ]
-        for b in self.buckets:
-            aggs.append(F.sum(f"gt_{b}").alias(f"gt_{b}"))
+        if with_buckets:
+            aggs += [F.sum(f"gt_{b}").alias(f"gt_{b}") for b in self.buckets]
         merged = partials.groupBy("ns", "op").agg(*aggs)
         return merged.withColumn(
             "avg_size", F.floor(F.col("total_size") / F.col("count")).cast("long")
         ).orderBy(F.desc("total_size"), "ns", "op")
+
+    def report(self) -> DataFrame:
+        """Cumulative A1 report: final merge of all batch partials — the
+        same partial/final algebra as the reference's mergeShardResults
+        (TailCommand.java:1103-1146)."""
+        return self._merged(self.partials_dir, with_buckets=True)
 
     def over_threshold_report(self) -> DataFrame:
         """Cumulative F5 side-output report: the ns::op accumulator over
@@ -412,19 +318,7 @@ class TailStream:
         report()."""
         if self.threshold is None:
             raise ValueError("TailStream was created without threshold")
-        partials = self._read_partials(
-            self.over_partials_dir, self._partials_schema(with_buckets=False)
-        )
-        merged = partials.groupBy("ns", "op").agg(
-            F.sum("count").alias("count"),
-            F.sum("total_size").alias("total_size"),
-            F.min("min_size").alias("min_size"),
-            F.max("max_size").alias("max_size"),
-            F.max("latest_ts").alias("latest_ts"),
-        )
-        return merged.withColumn(
-            "avg_size", F.floor(F.col("total_size") / F.col("count")).cast("long")
-        ).orderBy(F.desc("total_size"), "ns", "op")
+        return self._merged(self.over_partials_dir, with_buckets=False)
 
     def id_stats_report(self) -> DataFrame:
         """Cumulative A5 per-(ns,id) statistics across all micro-batches:
@@ -445,7 +339,7 @@ class TailStream:
                 ", total_doc_size bigint, min_doc_size bigint, "
                 "max_doc_size bigint, doc_size_count bigint"
             )
-        partials = self._read_partials(self.id_partials_dir, id_schema)
+        partials = self._read_batches(self.id_partials_dir, id_schema)
         aggs = [
             F.sum("count").alias("count"),
             F.sum("total_oplog_size").alias("total_oplog_size"),

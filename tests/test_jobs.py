@@ -136,6 +136,15 @@ def test_run_tail_cli(spark, transcripts, tmp_path, monkeypatch, capsys):
     assert "OPS >= 100 B" in out2
     assert "TOP 7 IDS" in out2
     assert "dump sink:" in out2
+    # continuous-only flags are rejected without --continuous
+    import pytest
+
+    for flag, value in (("--processing-time", "1 second"),
+                        ("--heartbeat-sec", "2"),
+                        ("--stop-file", str(tmp_path / "stop"))):
+        with pytest.raises(SystemExit):
+            _run(main, ["--input", src, "--work-dir", str(tmp_path / "wd"),
+                        flag, value], monkeypatch, capsys)
 
 
 def test_run_tail_continuous_sigint_and_stop_file(

@@ -2,6 +2,8 @@
 spark-submit launch owns master + driver memory; self-launch defaults them.
 Pure env-logic tests — no SparkSession is created here."""
 
+import os
+
 from oplog_analyzer_spark import session as S
 
 
@@ -17,6 +19,9 @@ def test_resolve_master_defaults_local_when_self_launched(monkeypatch):
     monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "7")
     assert S._resolve_master(None) == "local[7]"
+    # unset: the cores this process may run on, not a constant
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert S._resolve_master(None) == f"local[{len(os.sched_getaffinity(0))}]"
 
 
 def test_driver_memory_not_exported_under_spark_submit(monkeypatch):

@@ -708,6 +708,7 @@ def test_emb_neardup_stream_two_drains_equal_batch_semantics(spark, tmp_path):
             n_tables=2, dim=8, max_files_per_trigger=64,
         )
 
+    assert stream().verdicts().count() == 0   # no batch ever ran -> empty
     land(first, "a")
     stream().run_available()
     land(second, "b")
