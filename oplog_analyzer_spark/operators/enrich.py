@@ -1,4 +1,5 @@
-"""J1–J4 — the enrichment joins.
+"""J1/J3 — the enrichment joins (J2 is ``sources/stats_json``, J4 the
+admitted-id filter in ``operators/windows``).
 
 All reference joins are equi-joins on id/ns/shard against small lookup
 sides; the right physical strategy at any scale is a broadcast hash join,
@@ -45,9 +46,3 @@ def broadcast_lookup(
     AnalyzeCommand.java:289-306, SampleCommand.java:452-475)."""
     return df.join(F.broadcast(dim), on=on, how=how)
 
-
-def semi_join_admitted(
-    df: DataFrame, admitted: DataFrame, on: list[str]
-) -> DataFrame:
-    """J4 — admitted-id semi-join (SampleCommand.java:286-289)."""
-    return df.join(F.broadcast(admitted), on=on, how="left_semi")

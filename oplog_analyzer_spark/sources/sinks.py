@@ -18,21 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .tables import _NON_SCAN_NODES
-
-
-def _cheaply_rescannable(df: DataFrame) -> bool:
-    """True when ``df`` is a plain (possibly projected/filtered) source
-    scan that two aggregation branches can each read for the cost of one
-    column-pruned scan — false for computed frames (joins, explodes,
-    aggregates, Python stages upstream), where referencing the frame twice
-    would re-execute the whole chain twice."""
-    try:
-        plan = df._jdf.queryExecution().logical().toString()
-    except Exception:
-        return False
-    return not any(node in plan for node in _NON_SCAN_NODES + ("Generate",))
-
 
 def iceberg_available(spark: SparkSession) -> bool:
     """Probe for the iceberg-spark-runtime jar on the session's classpath.
@@ -109,66 +94,19 @@ def write_routed(
 
 def per_sink_aggregates(routed: DataFrame) -> DataFrame:
     """S7 analog — per-sink aggregate report (north_star): per (category,
-    ns): op counts, distinct conv_id, min/max ts.  Mirrors the
-    OplogTailingAnalyzer accumulator report keyed by routing target;
+    ns): op counts, distinct conv_id, min/max ts, total bytes.  Mirrors the
+    OplogTailingAnalyzer accumulator report keyed by routing target
+    (EntryAccumulator.java:210-228): one grouping pass, merged once;
     ``distinct_conv`` is an exact countDistinct.
-
-    Plan shape (r7): Catalyst's single-query rewrite of
-    ``countDistinct`` + regular aggs partial-aggregates on (category, ns,
-    conv_id) — and on a turns corpus that key is nearly unique per row
-    (measured 6.16M rows → 5.24M groups, a 1.18× reduction), so the first
-    exchange shipped ~every row carrying EIGHT dead partial buffers.
-    Splitting the regular aggs (full map-side combine down to the tiny
-    (category, ns) cardinality) from a keys-only distinct count and
-    re-joining the two #output-row frames shrinks that exchange to the
-    bare keys: readback aggregate 1.84 → 1.49 s min over 6 interleaved
-    rounds at 5M turns / 16c, identical rows.  The join is null-safe so a
-    null ns/category group matches its twin exactly as the single-pass
-    form groups it.
-
-    The split fires only when ``routed`` is cheaply re-scannable (a plain
-    file scan, e.g. the bench's sink read-back): two branches over a
-    COMPUTED frame would re-execute the whole parse→unwind→route chain
-    twice (the plan grows a second Generate + join subtree), so those
-    callers keep the single-pass form.
     """
-    regular = [
+    return routed.groupBy("category", "ns").agg(
         F.count(F.lit(1)).alias("op_count"),
         F.sum(F.when(F.col("op") == "i", 1).otherwise(0)).alias("n_insert"),
         F.sum(F.when(F.col("op") == "u", 1).otherwise(0)).alias("n_update"),
         F.sum(F.when(F.col("op") == "d", 1).otherwise(0)).alias("n_delete"),
         F.sum(F.when(F.col("op") == "c", 1).otherwise(0)).alias("n_command"),
-    ]
-    tail = [
+        F.countDistinct("conv_id").alias("distinct_conv"),
         F.min("ts").alias("min_ts"),
         F.max("ts").alias("max_ts"),
         F.sum("size").alias("total_bytes"),
-    ]
-    if not _cheaply_rescannable(routed):
-        return routed.groupBy("category", "ns").agg(
-            *regular,
-            F.countDistinct("conv_id").alias("distinct_conv"),
-            *tail,
-        )
-    base = routed.groupBy("category", "ns").agg(*regular, *tail)
-    dist = routed.groupBy("category", "ns").agg(
-        F.countDistinct("conv_id").alias("distinct_conv")
-    )
-    joined = base.join(
-        dist,
-        base["category"].eqNullSafe(dist["category"])
-        & base["ns"].eqNullSafe(dist["ns"]),
-    )
-    return joined.select(
-        base["category"],
-        base["ns"],
-        "op_count",
-        "n_insert",
-        "n_update",
-        "n_delete",
-        "n_command",
-        "distinct_conv",
-        "min_ts",
-        "max_ts",
-        "total_bytes",
     )

@@ -34,14 +34,30 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-#: logical-plan node names that mean the frame's partitioning is no longer
-#: scan-determined (a shuffle/exchange already redistributed it) — fan_out
-#: must not fire mid-pipeline on such frames (the file-split estimate below
-#: would be measuring the wrong thing)
-_NON_SCAN_NODES = (
-    "Repartition", "Aggregate", "Join", "Window", "Sort", "Deduplicate",
-    "MapInPandas", "FlatMapGroupsInPandas", "GlobalLimit",
-)
+#: the only optimized-plan nodes under which a frame's partitioning is
+#: still the file scan's own
+_SCAN_NODES = frozenset({"Project", "Filter", "LogicalRelation"})
+
+
+def _is_plain_scan(df: DataFrame) -> bool:
+    """True when ``df``'s optimized plan is a deterministic file scan under
+    projections and filters only.  Any other node — exchange, aggregate,
+    join, generator, Python evaluation, union, sample, local relation — or
+    a non-deterministic expression answers False."""
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan()
+        if not plan.deterministic():
+            return False
+        stack = [plan]
+        while stack:
+            node = stack.pop()
+            if node.getClass().getSimpleName() not in _SCAN_NODES:
+                return False
+            children = node.children()
+            stack.extend(children.apply(i) for i in range(children.size()))
+    except Exception:
+        return False
+    return True
 
 
 def _planned_scan_splits(df: DataFrame) -> int | None:
@@ -53,11 +69,7 @@ def _planned_scan_splits(df: DataFrame) -> int | None:
     ceil(chargedBytes / maxSplitBytes).  Pure footer-free arithmetic on
     the (already listed) file sizes — no job, no .rdd materialization
     (which costs ~0.5 s per call on this sandbox)."""
-    try:
-        plan = df._jdf.queryExecution().logical().toString()
-    except Exception:
-        return None
-    if any(node in plan for node in _NON_SCAN_NODES):
+    if not _is_plain_scan(df):
         return None
     try:
         files = df.inputFiles()
@@ -111,8 +123,9 @@ def fan_out(df: DataFrame, *key_cols: str, min_parts: int | None = None) -> Data
     10-30× per-row amplification (text → shingle arrays) dominates.
 
     Deliberately conservative — returns ``df`` unchanged when:
-      * the frame is not a plain (narrow) file scan — a shuffle upstream
-        already redistributed it;
+      * the frame is not a plain file scan (:func:`_is_plain_scan`) — a
+        shuffle upstream already redistributed it, or a Python stage or
+        non-deterministic expression sits between scan and caller;
       * the planned split count already reaches the target — the 100 TB
         case, where inputs arrive in thousands of files and a blanket
         repartition would be a pure extra shuffle.
@@ -158,21 +171,11 @@ def time_range_scan(
     return df
 
 
-def latest_offset(df: DataFrame, ts_col: str) -> DataFrame:
-    """S4 — latest-offset probe (TailCommand.java:1476-1482).
-
-    The reference sorts by $natural desc limit 1 projecting only ts; the
-    aggregate form lets Spark do a partial max per partition — no sort.
-    To ride an existing groupBy (a latest offset per scanned namespace),
-    add :func:`latest_offset_agg` to its agg list instead — a separate
-    function because a column can only be evaluated against the frame its
-    aggregation runs over, so a ``df`` parameter there would be a dead,
-    misleading argument."""
-    return df.agg(latest_offset_agg(ts_col))
-
-
 def latest_offset_agg(ts_col: str) -> F.Column:
-    """The S4 probe as an aggregate COLUMN for an existing groupBy."""
+    """S4 — latest-offset probe (TailCommand.java:1476-1482) as an
+    aggregate column for an existing groupBy.  The reference sorts by
+    $natural desc limit 1 projecting only ts; the aggregate form lets Spark
+    do a partial max per partition — no sort."""
     return F.max(ts_col).alias("latest_ts")
 
 

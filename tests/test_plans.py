@@ -243,6 +243,37 @@ def test_fan_out_fires_only_on_coarse_scans(spark, tmp_path):
     assert fan_out(local, "id") is local
 
 
+def test_fan_out_gate_is_structural(spark):
+    """fan_out's gate walks the optimized plan's node classes: a Python
+    UDF, a non-deterministic column, a union, a sample, a generator or a
+    non-file source leaves the frame untouched, while a string literal that
+    names plan nodes does not stop a coarse scan's fan-out.  Every case
+    collects the same multiset of rows as its input."""
+    from collections import Counter
+
+    from oplog_analyzer_spark.sources.tables import fan_out
+
+    docs = load_table(spark, SF_SMALL, "documents").select("doc_id", "text")
+    echo = F.udf(lambda s: s, "string")
+    untouched = {
+        "rand": docs.withColumn("r", F.rand(1)),
+        "python_udf": docs.withColumn("u", echo("text")),
+        "union": docs.union(docs),
+        "sample": docs.sample(0.5, seed=1),
+        "explode": docs.select("doc_id", F.explode(F.split("text", " ")).alias("w")),
+        "range": spark.range(5).withColumnRenamed("id", "doc_id"),
+    }
+    for name, df in untouched.items():
+        out = fan_out(df, "doc_id")
+        assert out is df, name
+        assert Counter(out.collect()) == Counter(df.collect()), name
+
+    literal = docs.filter(F.col("text") != "Join Sort")
+    fanned = fan_out(literal, "doc_id")
+    assert "Repartition" in fanned._jdf.queryExecution().optimizedPlan().toString()
+    assert Counter(fanned.collect()) == Counter(literal.collect())
+
+
 def test_neardup_stream_batch_join_shape(spark, tmp_path):
     """NearDupStream's per-batch reject join: bucket-keyed candidate join,
     signature verification by zip_with — no crossJoin anywhere."""

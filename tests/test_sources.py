@@ -199,12 +199,11 @@ def test_iceberg_probe_and_fallback(spark):
     assert iceberg_available(spark) is False
 
 
-def test_per_sink_aggregates_split_form_matches_single_pass(spark):
-    """r7: the exact-distinct path splits the regular aggs (full map-side
-    combine) from a keys-only distinct count and null-safe-joins the two —
-    the rewrite must be row-identical to the straightforward single
-    groupBy, INCLUDING null ns/category groups (a null-unsafe join would
-    silently drop them)."""
+def test_per_sink_aggregates_matches_reference(spark):
+    """per_sink_aggregates equals the straightforward single groupBy in
+    rows AND schema (names, types, nullability), INCLUDING null
+    ns/category groups, on a local relation and on a computed (joined)
+    frame."""
     from oplog_analyzer_spark.sources.sinks import per_sink_aggregates
 
     rows = []
@@ -222,46 +221,30 @@ def test_per_sink_aggregates_split_form_matches_single_pass(spark):
         rows, "category string, ns string, conv_id string, op string, size long"
     ).withColumn("ts", F.timestamp_seconds(F.col("size") + 1_600_000_000))
 
-    reference = routed.groupBy("category", "ns").agg(
-        F.count(F.lit(1)).alias("op_count"),
-        F.sum(F.when(F.col("op") == "i", 1).otherwise(0)).alias("n_insert"),
-        F.sum(F.when(F.col("op") == "u", 1).otherwise(0)).alias("n_update"),
-        F.sum(F.when(F.col("op") == "d", 1).otherwise(0)).alias("n_delete"),
-        F.sum(F.when(F.col("op") == "c", 1).otherwise(0)).alias("n_command"),
-        F.countDistinct("conv_id").alias("distinct_conv"),
-        F.min("ts").alias("min_ts"),
-        F.max("ts").alias("max_ts"),
-        F.sum("size").alias("total_bytes"),
-    )
-    got = per_sink_aggregates(routed)
-    assert got.columns == reference.columns
-    assert got.exceptAll(reference).count() == 0
-    assert reference.exceptAll(got).count() == 0
+    def reference(df):
+        return df.groupBy("category", "ns").agg(
+            F.count(F.lit(1)).alias("op_count"),
+            F.sum(F.when(F.col("op") == "i", 1).otherwise(0)).alias("n_insert"),
+            F.sum(F.when(F.col("op") == "u", 1).otherwise(0)).alias("n_update"),
+            F.sum(F.when(F.col("op") == "d", 1).otherwise(0)).alias("n_delete"),
+            F.sum(F.when(F.col("op") == "c", 1).otherwise(0)).alias("n_command"),
+            F.countDistinct("conv_id").alias("distinct_conv"),
+            F.min("ts").alias("min_ts"),
+            F.max("ts").alias("max_ts"),
+            F.sum("size").alias("total_bytes"),
+        )
+
+    got, ref = per_sink_aggregates(routed), reference(routed)
+    assert got.schema == ref.schema
+    assert got.exceptAll(ref).count() == 0
+    assert ref.exceptAll(got).count() == 0
     # null groups present and matched (9 null-category groups in the data)
     assert got.filter(F.col("category").isNull()).count() > 0
     assert got.filter(F.col("ns").isNull()).count() > 0
 
-    # the split fires on a cheaply re-scannable source (this local
-    # relation): two Aggregate branches + the re-join in the plan ...
-    plan = got._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("Aggregate ") == 2 and "Join" in plan
-    # ... but a COMPUTED frame (join upstream) keeps the single-pass form
-    # — a second branch would re-execute the whole upstream chain twice
     dim = spark.sql("SELECT * FROM VALUES ('cat0', 'g0') AS t(category, grp)")
-    computed = routed.join(dim, "category")
-    single = per_sink_aggregates(computed.drop("grp"))
-    plan2 = single._jdf.queryExecution().optimizedPlan().toString()
-    assert plan2.count("Aggregate ") == 1
-    ref2 = computed.drop("grp").groupBy("category", "ns").agg(
-        F.count(F.lit(1)).alias("op_count"),
-        F.sum(F.when(F.col("op") == "i", 1).otherwise(0)).alias("n_insert"),
-        F.sum(F.when(F.col("op") == "u", 1).otherwise(0)).alias("n_update"),
-        F.sum(F.when(F.col("op") == "d", 1).otherwise(0)).alias("n_delete"),
-        F.sum(F.when(F.col("op") == "c", 1).otherwise(0)).alias("n_command"),
-        F.countDistinct("conv_id").alias("distinct_conv"),
-        F.min("ts").alias("min_ts"),
-        F.max("ts").alias("max_ts"),
-        F.sum("size").alias("total_bytes"),
-    )
-    assert single.exceptAll(ref2).count() == 0
-    assert ref2.exceptAll(single).count() == 0
+    computed = routed.join(dim, "category").drop("grp")
+    got2, ref2 = per_sink_aggregates(computed), reference(computed)
+    assert got2.schema == ref2.schema
+    assert got2.exceptAll(ref2).count() == 0
+    assert ref2.exceptAll(got2).count() == 0

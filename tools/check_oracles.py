@@ -3,11 +3,15 @@ oracle_sql() on DuckDB over the same parquet, compare row count, sorted
 column names, and order-insensitive values.
 
 Usage: python tools/check_oracles.py [sf_dir] [name ...]
+
+Prints "N failures / M queries" over the M queries it ran; exits 1 on any
+failure and 2, before starting Spark, on a name that is not in queries().
 """
 
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
 
@@ -34,9 +38,16 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as E
     from oplog_analyzer_spark.session import get_spark
+
+    qs, oracles = E.queries(), E.oracle_sql()
+    unknown = sorted(only - qs.keys())
+    if unknown:
+        print(f"unknown query names: {' '.join(unknown)}")
+        return 2
+    ran = [name for name in qs if not only or name in only]
 
     spark = get_spark(master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
@@ -49,11 +60,9 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
-    qs, oracles = E.queries(), E.oracle_sql()
     failures = []
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
+    for name in ran:
+        fn = qs[name]
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as ex:
@@ -86,7 +95,7 @@ def main() -> int:
         else:
             tag = "" if sdt == odt else f"  [dtype drift: {sdt} vs {odt}]"
             print(f"OK    {name}: {len(sv)} rows{tag}")
-    print(f"\n{len(failures)} failures / {len(qs)} queries")
+    print(f"\n{len(failures)} failures / {len(ran)} queries")
     return 1 if failures else 0
 
 
