@@ -19,7 +19,13 @@ into the hash.
 
 from __future__ import annotations
 
+import hashlib
+import os
+import shutil
+import uuid
 from collections.abc import Callable
+from functools import partial
+from importlib.resources import files
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -80,6 +86,69 @@ def _q(name: str, oracle: str | None = None):
             ORACLES[name] = oracle
         return fn
     return deco
+
+
+# ---------------------------------------------------------------------------
+# materialize-then-oracle: a row whose Spark side cannot be twinned in SQL
+# (a corpus generated in-Spark, xxhash-seeded ANN answers, a two-drain
+# stream) publishes its artifact to a fixed parquet path and the oracle SQL
+# reads the SAME path back, so a query runs before its oracle.  The path
+# is keyed by the package source, so a published answer never outlives the
+# code that built it.
+
+
+def _code_key(root) -> str:
+    """First 12 hex digits of a sha256 over the sorted (relative path,
+    bytes) pairs of the ``.py`` files under ``root`` (an importlib.resources
+    Traversable, so a ``--py-files`` zip keys like the checkout)."""
+
+    def sources(node, prefix):
+        for child in node.iterdir():
+            if child.is_dir():
+                yield from sources(child, f"{prefix}{child.name}/")
+            elif child.name.endswith(".py"):
+                yield f"{prefix}{child.name}", child.read_bytes()
+
+    h = hashlib.sha256()
+    for rel, data in sorted(sources(root, "")):
+        h.update(b"%s\0%d\0" % (rel.encode(), len(data)) + data)
+    return h.hexdigest()[:12]
+
+
+_PUBLISH_ROOT = f"/tmp/oplog_spark_published/{_code_key(files(__package__))}"
+
+
+def _publish_once(name: str, build: Callable[[str, str], None]) -> str:
+    """Return ``_PUBLISH_ROOT/name``, building it first if it is absent.
+
+    ``build(tmp, scratch)`` writes the artifact into ``tmp``, a unique
+    sibling of the final path; ``scratch`` (created here, removed after)
+    holds stream inputs and checkpoints.  ``tmp`` is then renamed into
+    place, so a directory exists at the final path only as a complete
+    build.  Concurrent builders (the parallelized smoke test) race on the
+    rename: the loser drops its copy and returns the winner's, and a failed
+    rename with nothing published raises.  Old keys are not pruned."""
+    out = os.path.join(_PUBLISH_ROOT, name)
+    if os.path.exists(out):
+        return out
+    unique = f"{os.getpid()}-{uuid.uuid4().hex}"
+    tmp, scratch = f"{out}.tmp-{unique}", f"{out}.scratch-{unique}"
+    os.makedirs(scratch)
+    try:
+        build(tmp, scratch)
+        try:
+            os.rename(tmp, out)
+        except OSError:
+            if not os.path.exists(out):
+                raise
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+        shutil.rmtree(tmp, ignore_errors=True)
+    return out
+
+
+def _sf_tag(sf_dir: str) -> str:
+    return os.path.basename(os.path.normpath(sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -829,14 +898,11 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- ANN recall certification (VERDICT r05 next-round #6): the IVF
 #     candidate generation itself is xxhash64-seeded (no SQL twin), but its
 #     RECALL is oracle-able via the materialize-then-oracle pattern — the
-#     Spark side runs the shipped ivf_topk(k=1) once per (process, sf) and
-#     publishes its answers; the oracle recomputes brute-force top-1 in SQL
+#     Spark side runs the shipped ivf_topk(k=1) once per (code key, sf)
+#     and publishes its answers; the oracle recomputes brute-force top-1 in SQL
 #     and scores the SAME published answers.  Folded into the emb_top1_nn
 #     slot so the full 50-row driver window keeps every prior row. --------
 
-_ANN_RUN_ROOT = "/tmp/oplog_spark_ann_run"
-# bump when the IVF config under certification changes
-_ANN_VERSION = "v2"
 #: the IVF configuration under recall certification.  The driver testdata
 #: embeddings are near-uniform random — the worst case for any
 #: partition-based ANN (no cluster structure, so recall ≈ probed mass plus
@@ -846,43 +912,6 @@ _ANN_VERSION = "v2"
 #: and the structured-data recall behaviors (multiprobe/n_tables levers,
 #: nprobe=K degenerating to exact) are pytest-oracled separately.
 _ANN_IVF_CONF = dict(k=1, n_centroids=16, nprobe=8, max_bucket=4096)
-
-
-def _ivf_top1_published(spark: SparkSession, sf_dir: str) -> str:
-    """Run the shipped IVF ANN once per (process tree, sf) over the sf_dir
-    embeddings and atomically publish (q_id, ivf_nn_id, ivf_cosine) for
-    q_id < 100 — the _materialized_corpus publish pattern (write to a
-    process-unique tmp dir, os.rename into place, losers read the
-    winner's).  The path is keyed by the sf tag because the answers are a
-    function of the corpus; the oracle SQL statically reads the sf0.01
-    path, the only sf the driver compares at."""
-    import os
-    import shutil
-    import uuid
-
-    from .functions.similarity import ivf_topk
-
-    tag = os.path.basename(sf_dir.rstrip("/")) or "corpus"
-    out = os.path.join(_ANN_RUN_ROOT, f"{tag}_{_ANN_VERSION}")
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-    ivf = (
-        ivf_topk(load_table(spark, sf_dir, "embeddings"), **_ANN_IVF_CONF)
-        .filter(F.col("q_id") < 100)
-        .select(
-            "q_id",
-            F.col("c_id").alias("ivf_nn_id"),
-            F.col("cosine").alias("ivf_cosine"),
-        )
-    )
-    os.makedirs(_ANN_RUN_ROOT, exist_ok=True)
-    tmp = os.path.join(_ANN_RUN_ROOT, f".tmp-{os.getpid()}-{uuid.uuid4().hex}")
-    ivf.write.mode("overwrite").parquet(tmp)
-    try:
-        os.rename(tmp, out)  # atomic publish; fails if a winner exists
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 @_q(
@@ -903,7 +932,7 @@ WITH brute AS (
   ) WHERE rn = 1
 ), ivf AS (
   SELECT q_id, ivf_nn_id, ivf_cosine
-  FROM read_parquet('{_ANN_RUN_ROOT}/sf0.01_{_ANN_VERSION}/*.parquet')
+  FROM read_parquet('{_PUBLISH_ROOT}/ivf_sf0.01/*.parquet')
 )
 SELECT b.q_id, b.nn_id, b.cosine,
        coalesce(i.ivf_nn_id, -1) AS ivf_nn_id,
@@ -923,11 +952,19 @@ def emb_top1_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     by query and oracle alike).  A query the IVF returned no candidate for
     scores hit=0 via the (-1, -2.0) sentinels.  The recall floor itself is
     pinned in tests/test_functions.py."""
-    from .functions.similarity import top1_neighbor
+    from .functions.similarity import ivf_topk, top1_neighbor
 
     emb = load_table(spark, sf_dir, "embeddings")
     brute = top1_neighbor(emb, max_queries=100)
-    ivf = spark.read.parquet(_ivf_top1_published(spark, sf_dir))
+
+    def build(tmp: str, _scratch: str) -> None:
+        ivf_topk(emb, **_ANN_IVF_CONF).filter(F.col("q_id") < 100).select(
+            "q_id",
+            F.col("c_id").alias("ivf_nn_id"),
+            F.col("cosine").alias("ivf_cosine"),
+        ).write.parquet(tmp)
+
+    ivf = spark.read.parquet(_publish_once(f"ivf_{_sf_tag(sf_dir)}", build))
     return brute.join(ivf, "q_id", "left").select(
         "q_id",
         "nn_id",
@@ -1593,13 +1630,12 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- materialize-then-oracle queries: the transcript corpus is generated
-#     in-Spark (not a driver table), so each query writes the deterministic
-#     corpus to a fixed parquet path FIRST and the oracle SQL reads the
-#     SAME parquet back with read_parquet() — the driver always runs the
-#     Spark side before the oracle (VERDICT r02 "Next round" #2) ----------
+# --- transcript-corpus rows: the corpus is generated in-Spark (not a
+#     driver table), so each query publishes the deterministic corpus
+#     first and the oracle SQL reads the SAME parquet back (VERDICT r02
+#     "Next round" #2) --------------------------------------------------
 
-_CORPUS_ROOT = "/tmp/oplog_spark_oracle_corpus"
+_CORPUS_ROOT = f"{_PUBLISH_ROOT}/corpus"
 
 # the tool_catalog dimension, inlined for DuckDB (20 static rows,
 # transcripts.py::tool_catalog)
@@ -1610,44 +1646,14 @@ _CAT_VALUES = ", ".join(
 
 
 def _materialized_corpus(spark: SparkSession, name: str) -> str:
-    """Write the deterministic 300-conversation transcript corpus to a
-    PER-QUERY fixed path and return it.  An existing complete write
-    (_SUCCESS present) is reused — the corpus is bit-reproducible, and
-    skipping the rewrite keeps concurrently-running queries (the
-    parallelized smoke test) from deleting parquet files under each
-    other's lazy readers.  Bump the version suffix if generation
-    semantics ever change.
-
-    Publication is ATOMIC (ADVICE r03): the corpus is written to a
-    process-unique temp directory and os.rename()d into place, so two
-    concurrent first-time runs can't interleave overwrite writes into the
-    shared path — exactly one rename wins, the loser discards its copy and
-    reads the winner's."""
-    import os
-    import shutil
-    import uuid
-
+    """Publish the deterministic 300-conversation transcript corpus as
+    ``_CORPUS_ROOT/<name>`` and return the path."""
     from .transcripts import generate_transcripts
 
-    path = os.path.join(_CORPUS_ROOT, name)
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    tmp = os.path.join(_CORPUS_ROOT, f".{name}.tmp-{os.getpid()}-{uuid.uuid4().hex}")
-    generate_transcripts(spark, num_conversations=300).write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    try:
-        os.rename(tmp, path)  # atomic publish; fails if a winner exists
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            # a stale partial dir (crashed old run, pre-atomic layout)
-            # blocks the rename: replace it once, best-effort
-            shutil.rmtree(path, ignore_errors=True)
-            generate_transcripts(spark, num_conversations=300).write.mode(
-                "overwrite"
-            ).parquet(path)
-    return path
+    def build(tmp: str, _scratch: str) -> None:
+        generate_transcripts(spark, num_conversations=300).write.parquet(tmp)
+
+    return _publish_once(f"corpus/{name}", build)
 
 
 @_q(
@@ -1737,14 +1743,9 @@ def conversation_reassembly(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     Streaming — two availableNow drains over a growing input dir, the
 #     second resuming from the first's checkpoint (T1/T2/T6/T8) — and
 #     certified against a plain batch-SQL oracle over the SAME corpus:
-#     incremental ≡ batch, hashed row by row by the driver.  The run
-#     executes once per process tree and publishes its reports atomically
-#     (the _materialized_corpus pattern); both rows read the published
-#     parquet. -------------------------------------------------------------
+#     incremental ≡ batch, hashed row by row by the driver.  The run is
+#     published once (_publish_once); both rows read its reports. ------
 
-_TAIL_RUN_ROOT = "/tmp/oplog_spark_tail_run"
-# bump when the corpus, the option battery, or the report layout changes
-_TAIL_VERSION = "v1"
 #: the option battery under certification (mirrors `run_tail --ops i,u,d
 #: --min-size 50 --threshold 100 --buckets 80,100 --id-stats
 #: --id-stats-threshold 60`); shard_index stays pytest-only — its
@@ -1774,65 +1775,48 @@ WITH parsed AS (
 """
 
 
+def _land(parts: list[str], input_dir: str) -> None:
+    """Copy parquet part files into the flat directory a stream watches:
+    new files simply appear, the way new oplog entries do."""
+    os.makedirs(input_dir, exist_ok=True)
+    for part in parts:
+        shutil.copy(part, input_dir)
+
+
+def _parts(d: str) -> list[str]:
+    return sorted(os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet"))
+
+
 def _tail_published(spark: SparkSession) -> str:
-    """Run the two-drain incremental tail ONCE and atomically publish its
-    cumulative reports; concurrent callers (the parallelized smoke test)
-    race on the rename and the losers read the winner's copy.
+    """The two-drain incremental tail's cumulative reports, published once.
 
     Drain 1 sees the first half of the corpus part files; the rest are
-    then copied into the input dir and a FRESH TailStream over the same
-    work_dir drains only the delta (checkpointed source offsets = T2/T8
-    resume).  maxFilesPerTrigger=8 splits each drain into micro-batches,
-    so the merge-safe partials algebra is exercised across many batches,
-    not one."""
-    import os
-    import shutil
-    import uuid
-
+    then landed and a FRESH TailStream over the same work_dir drains only
+    the delta (checkpointed source offsets = T2/T8 resume).
+    maxFilesPerTrigger=8 splits each drain into micro-batches, so the
+    merge-safe partials algebra is exercised across many batches, not
+    one."""
     from .streaming.tail import TailStream
 
-    out = os.path.join(_TAIL_RUN_ROOT, _TAIL_VERSION)
-    if os.path.exists(os.path.join(out, "_PUBLISHED")):
-        return out
-    corpus = _materialized_corpus(spark, "tail_v1")
-    work = os.path.join(
-        _TAIL_RUN_ROOT, f".tmp-{os.getpid()}-{uuid.uuid4().hex}"
-    )
-    input_dir = os.path.join(work, "input")
-    os.makedirs(input_dir, exist_ok=True)
-    parts = sorted(f for f in os.listdir(corpus) if f.endswith(".parquet"))
-    half = max(1, len(parts) // 2)
-
-    def tail() -> TailStream:
-        return TailStream(
-            spark, input_dir, os.path.join(work, "wd"), **_TAIL_OPTS
+    def build(tmp: str, scratch: str) -> None:
+        parts = _parts(_materialized_corpus(spark, "tail_v1"))
+        input_dir = os.path.join(scratch, "input")
+        half = max(1, len(parts) // 2)
+        for wave in (parts[:half], parts[half:]):
+            _land(wave, input_dir)
+            t = TailStream(spark, input_dir, os.path.join(scratch, "wd"), **_TAIL_OPTS)
+            t.run_available()
+        null_long = F.lit(None).cast("long")
+        report = t.report().withColumn("section", F.lit("all")).unionByName(
+            t.over_threshold_report()
+            .withColumn("gt_80", null_long)
+            .withColumn("gt_100", null_long)
+            .withColumn("section", F.lit("over"))
         )
+        report.write.parquet(os.path.join(tmp, "report"))
+        t.id_stats_report().write.parquet(os.path.join(tmp, "id_stats"))
 
-    for wave in (parts[:half], parts[half:]):
-        for fname in wave:
-            shutil.copy2(os.path.join(corpus, fname), os.path.join(input_dir, fname))
-        tail().run_available()
-
-    t = tail()
-    null_long = F.lit(None).cast("long")
-    report = t.report().withColumn("section", F.lit("all")).unionByName(
-        t.over_threshold_report()
-        .withColumn("gt_80", null_long)
-        .withColumn("gt_100", null_long)
-        .withColumn("section", F.lit("over"))
-    )
-    report.write.mode("overwrite").parquet(os.path.join(work, "out", "report"))
-    t.id_stats_report().write.mode("overwrite").parquet(
-        os.path.join(work, "out", "id_stats")
-    )
-    open(os.path.join(work, "out", "_PUBLISHED"), "w").close()
-    os.makedirs(_TAIL_RUN_ROOT, exist_ok=True)
-    try:
-        os.rename(os.path.join(work, "out"), out)  # atomic publish
-    except OSError:
-        pass  # a concurrent winner published first — use theirs
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+    return _publish_once("tail", build)
 
 
 @_q(
@@ -1861,8 +1845,6 @@ def tail_incremental_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     drains, must equal the oracle's single batch pass over the whole
     corpus (incremental ≡ batch — the same invariant test_streaming.py
     pins, now hashed row-by-row by the driver)."""
-    import os
-
     return spark.read.parquet(os.path.join(_tail_published(spark), "report"))
 
 
@@ -1883,8 +1865,6 @@ def tail_id_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     drains — must equal one batch pass with the independent
     --idStatsThreshold (size ≥ 60) applied on top of the main filter
     battery (the reference's two-threshold system, README.md:412-431)."""
-    import os
-
     return spark.read.parquet(os.path.join(_tail_published(spark), "id_stats"))
 
 
@@ -2690,39 +2670,6 @@ _ANN_LSH_CONF = dict(
 )
 
 
-def _lsh_top1_published(spark: SparkSession, sf_dir: str) -> str:
-    """Run the shipped hyperplane-LSH ANN once per (process tree, sf) and
-    atomically publish (q_id, lsh_nn_id, lsh_cosine) for q_id < 100 — the
-    _ivf_top1_published pattern, separate path per ANN family."""
-    import os
-    import shutil
-    import uuid
-
-    from .functions.similarity import lsh_bucket_topk
-
-    tag = os.path.basename(sf_dir.rstrip("/")) or "corpus"
-    out = os.path.join(_ANN_RUN_ROOT, f"lsh_{tag}_{_ANN_VERSION}")
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-    lsh = (
-        lsh_bucket_topk(load_table(spark, sf_dir, "embeddings"), **_ANN_LSH_CONF)
-        .filter(F.col("q_id") < 100)
-        .select(
-            "q_id",
-            F.col("c_id").alias("lsh_nn_id"),
-            F.col("cosine").alias("lsh_cosine"),
-        )
-    )
-    os.makedirs(_ANN_RUN_ROOT, exist_ok=True)
-    tmp = os.path.join(_ANN_RUN_ROOT, f".tmp-{os.getpid()}-{uuid.uuid4().hex}")
-    lsh.write.mode("overwrite").parquet(tmp)
-    try:
-        os.rename(tmp, out)  # atomic publish; fails if a winner exists
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
-
-
 @_q(
     "ann_lsh_recall",
     f"""
@@ -2741,7 +2688,7 @@ WITH brute AS (
   ) WHERE rn = 1
 ), lsh AS (
   SELECT q_id, lsh_nn_id, lsh_cosine
-  FROM read_parquet('{_ANN_RUN_ROOT}/lsh_sf0.01_{_ANN_VERSION}/*.parquet')
+  FROM read_parquet('{_PUBLISH_ROOT}/lsh_sf0.01/*.parquet')
 )
 SELECT b.q_id, b.nn_id, b.cosine,
        coalesce(l.lsh_nn_id, -1) AS lsh_nn_id,
@@ -2759,11 +2706,19 @@ def ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the PUBLISHED answers are scored by both engines against the SQL
     brute-force oracle — certifying the recall the docstring's levers
     claim (94/100 here vs 47/100 single-table)."""
-    from .functions.similarity import top1_neighbor
+    from .functions.similarity import lsh_bucket_topk, top1_neighbor
 
     emb = load_table(spark, sf_dir, "embeddings")
     brute = top1_neighbor(emb, max_queries=100)
-    lsh = spark.read.parquet(_lsh_top1_published(spark, sf_dir))
+
+    def build(tmp: str, _scratch: str) -> None:
+        lsh_bucket_topk(emb, **_ANN_LSH_CONF).filter(F.col("q_id") < 100).select(
+            "q_id",
+            F.col("c_id").alias("lsh_nn_id"),
+            F.col("cosine").alias("lsh_cosine"),
+        ).write.parquet(tmp)
+
+    lsh = spark.read.parquet(_publish_once(f"lsh_{_sf_tag(sf_dir)}", build))
     return brute.join(lsh, "q_id", "left").select(
         "q_id",
         "nn_id",
@@ -2938,90 +2893,40 @@ def trigram_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return trigram_coverage(docs, top_k=500)
 
 
-_DEDUP_STREAM_ROOT = "/tmp/oplog_spark_dedup_stream_run"
-# bump when the feed construction or the report layout changes
-_DEDUP_STREAM_VERSION = "v1"
+def _two_drain_published(
+    name: str,
+    table: DataFrame,
+    id_col: str,
+    planted: DataFrame,
+    stream: Callable[[str, str], object],
+    report: Callable[[object], DataFrame],
+) -> str:
+    """Publish one dedup stream's report after two checkpoint-resumed
+    drains over a deterministic, id-ordered feed — the arrival order under
+    which streaming admission provably equals batch min-id dedup:
 
+      drain 1  the rows of ``table`` with ``id_col <= max(id_col) // 2``;
+      drain 2  the upper half PLUS the caller's ``planted`` duplicates, so
+               cross-drain rejection is exercised non-vacuously, and a
+               FRESH ``stream(input_dir, work_dir)`` over the same work_dir
+               sees only the delta.
 
-def _dedup_stream_published(spark: SparkSession, sf_dir: str) -> str:
-    """Run the two-drain streaming exact-dedup ONCE per (process tree, sf)
-    and atomically publish its cumulative admission table.
+    ``report(stream)`` is written as the published parquet."""
 
-    Feed construction (deterministic, id-ordered — the arrival order under
-    which streaming admission provably equals batch min-id dedup):
+    def build(tmp: str, scratch: str) -> None:
+        input_dir = os.path.join(scratch, "input")
+        work = os.path.join(scratch, "stream")
+        mid = table.agg(F.max(id_col)).collect()[0][0] // 2
+        lower = table.filter(F.col(id_col) <= mid)
+        upper = table.filter(F.col(id_col) > mid).unionByName(planted)
+        for k, feed in enumerate((lower, upper)):
+            stage = os.path.join(scratch, f"stage{k}")
+            feed.write.parquet(stage)
+            _land(_parts(stage), input_dir)
+            stream(input_dir, work).run_available()
+        report(stream(input_dir, work)).write.parquet(tmp)
 
-      drain 1  the lower-id half of the documents table;
-      drain 2  the upper-id half PLUS a planted duplicate of every
-               doc_id % 3 == 0 document under id + 1_000_000 — so
-               cross-drain duplicate admission (the hash was already
-               admitted in batch 0) is exercised non-vacuously, with
-               checkpointed-offset resume between the drains (a FRESH
-               DedupStream over the same work_dir sees only the delta).
-    """
-    import os
-    import shutil
-    import uuid
-
-    from .streaming.dedup_stream import DedupStream
-
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = os.path.join(_DEDUP_STREAM_ROOT, _DEDUP_STREAM_VERSION, tag)
-    if os.path.exists(os.path.join(out, "_PUBLISHED")):
-        return out
-
-    docs = load_table(spark, sf_dir, "documents")
-    mid = docs.agg(F.max("doc_id")).collect()[0][0] // 2
-    work = os.path.join(
-        _DEDUP_STREAM_ROOT, f".tmp-{os.getpid()}-{uuid.uuid4().hex}"
-    )
-    input_dir = os.path.join(work, "input")
-    stream_dir = os.path.join(work, "stream")
-    os.makedirs(input_dir, exist_ok=True)
-
-    def _land(frame, stage_name: str, prefix: str) -> None:
-        """Write a feed increment then copy its part files into the flat
-        input dir (the _tail_published landing pattern — the streaming
-        source watches ONE directory and new files simply appear)."""
-        stage = os.path.join(work, stage_name)
-        frame.write.mode("overwrite").parquet(stage)
-        k = 0
-        for f in sorted(os.listdir(stage)):
-            if f.endswith(".parquet"):
-                shutil.copy(
-                    os.path.join(stage, f),
-                    os.path.join(input_dir, f"{prefix}-{k}.parquet"),
-                )
-                k += 1
-
-    _land(docs.filter(F.col("doc_id") <= mid), "stage1", "half1")
-    DedupStream(
-        spark, input_dir, stream_dir, max_files_per_trigger=64
-    ).run_available()
-
-    upper = docs.filter(F.col("doc_id") > mid)
-    planted = docs.filter(F.col("doc_id") % 3 == 0).withColumn(
-        "doc_id", F.col("doc_id") + F.lit(1_000_000)
-    )
-    _land(upper.unionByName(planted), "stage2", "half2")
-    DedupStream(
-        spark, input_dir, stream_dir, max_files_per_trigger=64
-    ).run_available()
-
-    report_dir = os.path.join(work, "out")
-    DedupStream(
-        spark, input_dir, stream_dir, max_files_per_trigger=64
-    ).admitted().write.mode("overwrite").parquet(
-        os.path.join(report_dir, "admitted")
-    )
-    open(os.path.join(report_dir, "_PUBLISHED"), "w").close()
-
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    try:
-        os.rename(report_dir, out)  # atomic publish
-    except OSError:
-        pass  # a concurrent winner published first — use theirs
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+    return _publish_once(name, build)
 
 
 @_q(
@@ -3046,11 +2951,19 @@ def stream_dedup_admitted(spark: SparkSession, sf_dir: str) -> DataFrame:
     later copy counted as turned away.  The oracle recomputes the whole
     admission table from the equivalent bounded feed; the merge-safe
     partials algebra (first-batch-wins min(struct), summed counts) is what
-    is being certified, row by row."""
-    out = _dedup_stream_published(spark, sf_dir)
-    import os
+    is being certified, row by row.  The feed plants a copy of every
+    ``doc_id % 3 == 0`` document under ``id + 1_000_000``."""
+    from .streaming.dedup_stream import DedupStream
 
-    admitted = spark.read.parquet(os.path.join(out, "admitted"))
+    docs = load_table(spark, sf_dir, "documents")
+    planted = docs.filter(F.col("doc_id") % 3 == 0).withColumn(
+        "doc_id", F.col("doc_id") + F.lit(1_000_000)
+    )
+    admitted = spark.read.parquet(_two_drain_published(
+        f"dedup_{_sf_tag(sf_dir)}", docs, "doc_id", planted,
+        partial(DedupStream, spark, max_files_per_trigger=64),
+        DedupStream.admitted,
+    ))
     return admitted.select(
         "text_hash",
         F.col("keep_id").cast("long").alias("keep_id"),
@@ -3455,80 +3368,6 @@ def dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _dsir(docs, docs.filter("lang = 'en'"), hash_fn="xxhash64", k=100)
 
 
-def _neardup_stream_published(spark: SparkSession, sf_dir: str) -> str:
-    """Two-drain streaming NEAR-dup (minhash/LSH admission) over the same
-    deterministic id-ordered feed pattern as :func:`_dedup_stream_published`,
-    with planted near-duplicates: every ``doc_id % 5 == 0`` document
-    reappears in drain 2 under ``id + 1_000_000`` with ``' qq zz'``
-    appended — a high-but-not-exact jaccard clone, so cross-drain
-    signature-estimate rejection is exercised non-vacuously alongside the
-    corpus's natural near-dups."""
-    import os
-    import shutil
-    import uuid
-
-    from .streaming.dedup_stream import NearDupStream
-
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = os.path.join(_DEDUP_STREAM_ROOT, "neardup-" + _DEDUP_STREAM_VERSION, tag)
-    if os.path.exists(os.path.join(out, "_PUBLISHED")):
-        return out
-
-    docs = load_table(spark, sf_dir, "documents")
-    mid = docs.agg(F.max("doc_id")).collect()[0][0] // 2
-    work = os.path.join(
-        _DEDUP_STREAM_ROOT, f".tmp-nd-{os.getpid()}-{uuid.uuid4().hex}"
-    )
-    input_dir = os.path.join(work, "input")
-    stream_dir = os.path.join(work, "stream")
-    os.makedirs(input_dir, exist_ok=True)
-
-    def _land(frame, stage_name: str, prefix: str) -> None:
-        stage = os.path.join(work, stage_name)
-        frame.write.mode("overwrite").parquet(stage)
-        k = 0
-        for f in sorted(os.listdir(stage)):
-            if f.endswith(".parquet"):
-                shutil.copy(
-                    os.path.join(stage, f),
-                    os.path.join(input_dir, f"{prefix}-{k}.parquet"),
-                )
-                k += 1
-
-    def _stream() -> NearDupStream:
-        return NearDupStream(
-            spark, input_dir, stream_dir,
-            num_hashes=16, bands=4, min_match=12, hash_fn="md5",
-            max_files_per_trigger=64,
-        )
-
-    _land(docs.filter(F.col("doc_id") <= mid), "stage1", "half1")
-    _stream().run_available()
-
-    upper = docs.filter(F.col("doc_id") > mid)
-    planted = docs.filter(F.col("doc_id") % 5 == 0).select(
-        (F.col("doc_id") + F.lit(1_000_000)).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" qq zz")).alias("text"),
-        "lang", "source", "n_chars",
-    )
-    _land(upper.unionByName(planted), "stage2", "half2")
-    _stream().run_available()
-
-    report_dir = os.path.join(work, "out")
-    _stream().verdicts().write.mode("overwrite").parquet(
-        os.path.join(report_dir, "verdicts")
-    )
-    open(os.path.join(report_dir, "_PUBLISHED"), "w").close()
-
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    try:
-        os.rename(report_dir, out)  # atomic publish
-    except OSError:
-        pass  # a concurrent winner published first — use theirs
-    shutil.rmtree(work, ignore_errors=True)
-    return out
-
-
 def _stream_neardup_oracle(num_hashes: int, bands: int, min_match: int) -> str:
     """DuckDB twin of the NearDupStream certification feed: recompute the
     md5 minhash signatures, band buckets, candidate pairs (predecessor =
@@ -3598,87 +3437,30 @@ def stream_neardup_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics, integer signature-match threshold) must equal the one-pass
     first-principles computation — per doc, the admit/reject verdict.  The
     oracle rebuilds signatures, buckets, candidates and rejects in SQL
-    over the equivalent bounded feed."""
-    out = _neardup_stream_published(spark, sf_dir)
-    import os
+    over the equivalent bounded feed.  The feed plants every
+    ``doc_id % 5 == 0`` document under ``id + 1_000_000`` with ``' qq zz'``
+    appended — a high-but-not-exact jaccard clone, so cross-drain
+    signature-estimate rejection is exercised alongside the corpus's
+    natural near-dups."""
+    from .streaming.dedup_stream import NearDupStream
 
-    verdicts = spark.read.parquet(os.path.join(out, "verdicts"))
+    docs = load_table(spark, sf_dir, "documents")
+    planted = docs.filter(F.col("doc_id") % 5 == 0).select(
+        (F.col("doc_id") + F.lit(1_000_000)).alias("doc_id"),
+        F.concat(F.col("text"), F.lit(" qq zz")).alias("text"),
+        "lang", "source", "n_chars",
+    )
+    verdicts = spark.read.parquet(_two_drain_published(
+        f"neardup_{_sf_tag(sf_dir)}", docs, "doc_id", planted,
+        partial(
+            NearDupStream, spark, num_hashes=16, bands=4, min_match=12,
+            hash_fn="md5", max_files_per_trigger=64,
+        ),
+        NearDupStream.verdicts,
+    ))
     return verdicts.select(
         F.col("id").cast("long").alias("doc_id"), "admitted"
     )
-
-
-def _embdedup_stream_published(spark: SparkSession, sf_dir: str) -> str:
-    """Two-drain streaming EMBEDDING near-dup over an id-ordered feed:
-    drain 1 = the lower-id half of the embeddings table, drain 2 = the
-    upper half plus planted exact-direction clones (every ``vec_id % 7 ==
-    0`` vector reappears under ``id + 1_000_000`` scaled by 1.25 — cosine
-    exactly 1 with its source, so cross-drain rejection is non-vacuous)."""
-    import os
-    import shutil
-    import uuid
-
-    from .streaming.dedup_stream import EmbNearDupStream
-
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = os.path.join(_DEDUP_STREAM_ROOT, "embdedup-" + _DEDUP_STREAM_VERSION, tag)
-    if os.path.exists(os.path.join(out, "_PUBLISHED")):
-        return out
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    mid = emb.agg(F.max("vec_id")).collect()[0][0] // 2
-    work = os.path.join(
-        _DEDUP_STREAM_ROOT, f".tmp-emb-{os.getpid()}-{uuid.uuid4().hex}"
-    )
-    input_dir = os.path.join(work, "input")
-    stream_dir = os.path.join(work, "stream")
-    os.makedirs(input_dir, exist_ok=True)
-
-    def _land(frame, stage_name: str, prefix: str) -> None:
-        stage = os.path.join(work, stage_name)
-        frame.write.mode("overwrite").parquet(stage)
-        k = 0
-        for f in sorted(os.listdir(stage)):
-            if f.endswith(".parquet"):
-                shutil.copy(
-                    os.path.join(stage, f),
-                    os.path.join(input_dir, f"{prefix}-{k}.parquet"),
-                )
-                k += 1
-
-    def _stream() -> EmbNearDupStream:
-        return EmbNearDupStream(
-            spark, input_dir, stream_dir,
-            threshold=0.9, n_planes=12, n_tables=2, multiprobe=True,
-            dim=64, seed=42, max_files_per_trigger=64,
-        )
-
-    _land(emb.filter(F.col("vec_id") <= mid), "stage1", "half1")
-    _stream().run_available()
-
-    upper = emb.filter(F.col("vec_id") > mid)
-    planted = emb.filter(F.col("vec_id") % 7 == 0).select(
-        (F.col("vec_id") + F.lit(1_000_000)).alias("vec_id"),
-        F.transform("embedding", lambda x: (x * F.lit(1.25)).cast("float"))
-        .alias("embedding"),
-        "label",
-    )
-    _land(upper.unionByName(planted), "stage2", "half2")
-    _stream().run_available()
-
-    report_dir = os.path.join(work, "out")
-    _stream().verdicts().write.mode("overwrite").parquet(
-        os.path.join(report_dir, "verdicts")
-    )
-    open(os.path.join(report_dir, "_PUBLISHED"), "w").close()
-
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    try:
-        os.rename(report_dir, out)  # atomic publish
-    except OSError:
-        pass
-    shutil.rmtree(work, ignore_errors=True)
-    return out
 
 
 @_q(
@@ -3695,7 +3477,7 @@ WITH feed AS (
   WHERE list_cosine_similarity(a.v, b.v) >= 0.9
 ), sv AS (
   SELECT id, admitted FROM read_parquet(
-    '{_DEDUP_STREAM_ROOT}/embdedup-{_DEDUP_STREAM_VERSION}/sf0.01/verdicts/*.parquet')
+    '{_PUBLISH_ROOT}/embdedup_sf0.01/*.parquet')
 )
 SELECT f.id AS vec_id, sv.admitted,
        (r.id IS NOT NULL) AS brute_reject,
@@ -3712,15 +3494,11 @@ def stream_embdedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle.  ``sound`` certifies every stream reject is brute-justified
     (exact verification ⇒ zero false positives — must be all true);
     ``admitted AND brute_reject`` rows are LSH misses, visible and
-    counted, the documented recall trade."""
-    import os
-
-    out = _embdedup_stream_published(spark, sf_dir)
-    verdicts = spark.read.parquet(os.path.join(out, "verdicts")).select(
-        "id", "admitted"
-    )
-
+    counted, the documented recall trade.  The feed plants every
+    ``vec_id % 7 == 0`` vector under ``id + 1_000_000`` scaled by 1.25 —
+    cosine exactly 1 with its source."""
     from .functions.similarity import normalize
+    from .streaming.dedup_stream import EmbNearDupStream
 
     emb = load_table(spark, sf_dir, "embeddings")
     planted = emb.filter(F.col("vec_id") % 7 == 0).select(
@@ -3729,6 +3507,14 @@ def stream_embdedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("embedding"),
         "label",
     )
+    verdicts = spark.read.parquet(_two_drain_published(
+        f"embdedup_{_sf_tag(sf_dir)}", emb, "vec_id", planted,
+        partial(
+            EmbNearDupStream, spark, threshold=0.9, n_planes=12, n_tables=2,
+            multiprobe=True, dim=64, seed=42, max_files_per_trigger=64,
+        ),
+        EmbNearDupStream.verdicts,
+    )).select("id", "admitted")
     feed = emb.unionByName(planted)
     norm = normalize(feed, "embedding").select(
         F.col("vec_id").alias("id"), "v"

@@ -15,28 +15,8 @@ one-line change (SURVEY.md §7.5.6).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    """Probe for the iceberg-spark-runtime jar on the session's classpath.
-
-    The north_rule names Iceberg sinks; this sandbox ships no
-    iceberg-spark-runtime jar and has no network to fetch one
-    (spark.jars.packages needs a resolver), so the probe returns False here
-    and the writers below fall back to identically-laid-out parquet
-    directories.  On a cluster with the jar present, pass
-    ``format="iceberg"`` to write_routed and the same code writes Iceberg
-    tables (plus a catalog config in spark-defaults).
-    """
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.iceberg.spark.source.IcebergSource"
-        )
-        return True
-    except Exception:
-        return False
 
 
 def route_categories(

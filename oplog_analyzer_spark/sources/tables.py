@@ -177,36 +177,3 @@ def latest_offset_agg(ts_col: str) -> F.Column:
     $natural desc limit 1 projecting only ts; the aggregate form lets Spark
     do a partial max per partition — no sort."""
     return F.max(ts_col).alias("latest_ts")
-
-
-def bucket_table(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    num_buckets: int = 32,
-    sort_col: str | None = None,
-) -> None:
-    """Persist a fact table bucketed (and optionally sorted) by its join
-    key.  At 100 TB this is the co-located-join path: two tables bucketed
-    the same way join with ZERO shuffle of either side — the physical plan
-    shows no Exchange above the scans (asserted in tests/test_plans.py).
-    Local-mode stand-in for Iceberg's ``bucket(N, col)`` partition
-    transform + Spark's storage-partitioned join.
-    """
-    writer = df.write.mode("overwrite").format("parquet")
-    writer = writer.bucketBy(num_buckets, bucket_col)
-    if sort_col is not None:
-        writer = writer.sortBy(sort_col)
-    writer.saveAsTable(table_name)
-
-
-def colocated_join(
-    spark: SparkSession, left_table: str, right_table: str, on: str | list[str],
-    how: str = "inner",
-) -> DataFrame:
-    """Join two same-bucketed saved tables shuffle-free.  Broadcast is
-    disabled for the join so the plan demonstrates the bucketed SortMergeJoin
-    without Exchange — at real scale neither side fits a broadcast anyway."""
-    left = spark.table(left_table).hint("merge")
-    right = spark.table(right_table)
-    return left.join(right, on=on, how=how)

@@ -114,15 +114,13 @@ class MicroBatchStream:
 
     def _read_batches(self, base_dir: str, empty_schema: str) -> DataFrame:
         """All ``batch_id=<k>`` outputs of one sink, with ``batch_id`` as a
-        column; an empty frame of ``empty_schema`` when no micro-batch has
-        written there yet (fresh or empty input: the reports then print
-        empty, like a zero-row batch pass, instead of raising on the
-        missing glob)."""
+        column found by partition discovery over ``base_dir``; an empty
+        frame of ``empty_schema`` when no micro-batch has written there yet
+        (fresh or empty input: the reports then print empty, like a
+        zero-row batch pass, instead of raising on the missing dir)."""
         if not os.path.isdir(base_dir):
             return self.spark.createDataFrame([], empty_schema)
-        return self.spark.read.option("basePath", base_dir).parquet(
-            os.path.join(base_dir, "batch_id=*")
-        )
+        return self.spark.read.parquet(base_dir)
 
 
 def parse_stream_args(ap: argparse.ArgumentParser) -> argparse.Namespace:

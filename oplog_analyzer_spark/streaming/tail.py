@@ -368,9 +368,7 @@ class TailStream(MicroBatchStream):
         micro-batch (replay-overwritten, so exactly-once content)."""
         if not self.dump:
             raise ValueError("TailStream was created without dump")
-        return self.spark.read.option("basePath", self.dump_dir).parquet(
-            os.path.join(self.dump_dir, "batch_id=*")
-        )
+        return self.spark.read.parquet(self.dump_dir)
 
     def lag_seconds(self, now_ts: str) -> DataFrame:
         """T4/P8 — lag vs a supplied wallclock (TailCommand.java:1073-1082;

@@ -1,7 +1,16 @@
 """Driver-contract smoke tests: entry() runs, every queries() entry runs at
-sf0.001, every oracle key has a matching query key."""
+sf0.001, every oracle key has a matching query key; and the publish-once
+helper the materialize-then-oracle rows share."""
 
 from __future__ import annotations
+
+import errno
+import os
+import re
+import zipfile
+from pathlib import Path
+
+import pytest
 
 import __spark_entry__ as E
 
@@ -135,3 +144,114 @@ def test_bench_headline_queries_registered():
     missing = [n for n in bench.HEADLINE_QUERIES if n not in qs]
     assert not missing, missing
     assert set(bench.QUERY_REV) <= set(qs)
+
+
+# ---------------------------------------------------------------------------
+# the publish-once helper behind the materialize-then-oracle rows (no Spark)
+
+
+def _publish_root(monkeypatch, root):
+    from oplog_analyzer_spark import entry_queries as EQ
+
+    monkeypatch.setattr(EQ, "_PUBLISH_ROOT", str(root))
+    return EQ
+
+
+def _writer(calls: list, content: str):
+    def build(tmp, scratch):
+        assert os.path.isdir(scratch)
+        calls.append(tmp)
+        os.makedirs(tmp)
+        with open(os.path.join(tmp, "part.txt"), "w") as f:
+            f.write(content)
+
+    return build
+
+
+def test_publish_once_second_call_does_not_rebuild(tmp_path, monkeypatch):
+    EQ = _publish_root(monkeypatch, tmp_path)
+    calls = []
+    first = EQ._publish_once("art", _writer(calls, "a"))
+    again = EQ._publish_once("art", _writer(calls, "b"))
+    assert first == again == str(tmp_path / "art")
+    assert len(calls) == 1
+    assert (tmp_path / "art" / "part.txt").read_text() == "a"
+    assert os.listdir(tmp_path) == ["art"]  # no tmp or scratch dir left
+
+
+def test_publish_once_new_key_publishes_new_dir(tmp_path, monkeypatch):
+    calls = []
+    EQ = _publish_root(monkeypatch, tmp_path / "key1")
+    old = EQ._publish_once("art", _writer(calls, "old"))
+    EQ = _publish_root(monkeypatch, tmp_path / "key2")
+    new = EQ._publish_once("art", _writer(calls, "new"))
+    assert old != new and len(calls) == 2
+    assert (tmp_path / "key1" / "art" / "part.txt").read_text() == "old"
+    assert (tmp_path / "key2" / "art" / "part.txt").read_text() == "new"
+
+
+def test_publish_once_lost_race_returns_winner(tmp_path, monkeypatch):
+    EQ = _publish_root(monkeypatch, tmp_path)
+    calls = []
+    loser = _writer(calls, "loser")
+
+    def build(tmp, scratch):
+        _writer([], "winner")(str(tmp_path / "art"), scratch)  # a concurrent winner
+        loser(tmp, scratch)
+
+    out = EQ._publish_once("art", build)
+    assert out == str(tmp_path / "art") and len(calls) == 1
+    assert (tmp_path / "art" / "part.txt").read_text() == "winner"
+    assert os.listdir(tmp_path) == ["art"]
+
+
+def test_publish_once_failed_rename_raises(tmp_path, monkeypatch):
+    EQ = _publish_root(monkeypatch, tmp_path)
+
+    def rename(src, dst):
+        raise OSError(errno.EXDEV, "cross-device link", src)
+
+    monkeypatch.setattr(os, "rename", rename)
+    with pytest.raises(OSError):
+        EQ._publish_once("art", _writer([], "a"))
+    assert os.listdir(tmp_path) == []
+
+
+def test_code_key_covers_py_sources_and_zip(tmp_path):
+    """The key changes with any .py byte, ignores other files, and reads a
+    --py-files zip of the package exactly like the checkout."""
+    from importlib.resources import files
+
+    from oplog_analyzer_spark.entry_queries import _code_key
+
+    pkg = tmp_path / "pkg"
+    (pkg / "sub").mkdir(parents=True)
+    (pkg / "a.py").write_text("x = 1\n")
+    (pkg / "sub" / "b.py").write_text("y = 2\n")
+    key = _code_key(pkg)
+    assert re.fullmatch(r"[0-9a-f]{12}", key)
+    (pkg / "sub" / "b.pyc").write_bytes(b"\0")
+    assert _code_key(pkg) == key
+    (pkg / "sub" / "b.py").write_text("y = 3\n")
+    assert _code_key(pkg) != key
+
+    src = files("oplog_analyzer_spark")
+    archive = tmp_path / "pkg.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        for path in Path(str(src)).rglob("*.py"):
+            rel = path.relative_to(str(src)).as_posix()
+            z.write(path, f"oplog_analyzer_spark/{rel}")
+    assert _code_key(zipfile.Path(archive, "oplog_analyzer_spark/")) == _code_key(src)
+
+
+def test_oracle_paths_lie_under_the_keyed_root():
+    """Every /tmp path an oracle reads is a published artifact of THIS
+    package source, never a fixed path an older build may have filled."""
+    from oplog_analyzer_spark.entry_queries import _PUBLISH_ROOT
+
+    assert re.fullmatch(r"/tmp/oplog_spark_published/[0-9a-f]{12}", _PUBLISH_ROOT)
+    paths = [
+        p for sql in E.oracle_sql().values() for p in re.findall(r"'(/tmp/[^']*)'", sql)
+    ]
+    assert paths
+    assert all(p.startswith(_PUBLISH_ROOT + "/") for p in paths), paths

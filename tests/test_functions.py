@@ -627,19 +627,11 @@ def test_emb_top1_nn_row_pins_ivf_recall_floor(spark):
     — the published ivf_topk answers under _ANN_IVF_CONF must reach the
     documented floor, and ivf_hit must be exactly the cosine-based hit
     indicator the oracle recomputes (sentinel misses score 0, never
-    NULL)."""
-    import shutil
-
-    from oplog_analyzer_spark.entry_queries import (
-        _ANN_RUN_ROOT,
-        _ANN_VERSION,
-        emb_top1_nn,
-    )
+    NULL).  The published answers are keyed by the package source, so
+    they come from THIS code, not a stale run."""
+    from oplog_analyzer_spark.entry_queries import emb_top1_nn
     from tests.conftest import SF_ORACLE
 
-    shutil.rmtree(
-        f"{_ANN_RUN_ROOT}/sf0.01_{_ANN_VERSION}", ignore_errors=True
-    )  # force a fresh publish so the floor tests THIS code, not a stale run
     rows = emb_top1_nn(spark, SF_ORACLE).collect()
     assert len(rows) == 100
     hits = sum(r["ivf_hit"] for r in rows)

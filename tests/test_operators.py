@@ -160,15 +160,6 @@ def test_redact_diff(spark):
     assert got[1] == "no diff here"
 
 
-def test_lookup_enrich_fallback(spark):
-    from oplog_analyzer_spark.operators.enrich import lookup_actual_size
-
-    facts = _mk(spark, [("a", 10), ("b", 20)], "id string, size long")
-    dim = _mk(spark, [("a", 99)], "id string, actual_size long")
-    out = {r["id"]: r["doc_size"] for r in lookup_actual_size(facts, dim).collect()}
-    assert out == {"a": 99, "b": 20}  # b falls back to oplog size
-
-
 def test_resolve_shard_indexes_sorted_positions(spark):
     from oplog_analyzer_spark.operators.filters import (
         resolve_shard_indexes,

@@ -147,43 +147,6 @@ def test_reassembly_two_phase_plan(spark, transcripts):
     assert "__bucket" in two
 
 
-def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    """Two tables bucketed by the join key join with NO Exchange above
-    either scan — the co-located fact⋈fact path for 100 TB (Iceberg
-    bucket-transform / storage-partitioned join stand-in)."""
-    from oplog_analyzer_spark.sources.tables import (
-        bucket_table,
-        colocated_join,
-        load_table,
-    )
-
-    # saved to the session's default warehouse (./spark-warehouse, gitignored)
-    orders = load_table(spark, SF_SMALL, "orders")
-    lineitem = load_table(spark, SF_SMALL, "lineitem")
-    bucket_table(
-        orders.withColumnRenamed("o_orderkey", "okey"),
-        "b_orders", "okey", num_buckets=8, sort_col="okey",
-    )
-    bucket_table(
-        lineitem.withColumnRenamed("l_orderkey", "okey"),
-        "b_lineitem", "okey", num_buckets=8, sort_col="okey",
-    )
-    try:
-        joined = colocated_join(spark, "b_orders", "b_lineitem", on="okey")
-        plan = plan_of(joined)
-        tree = plan.split("\n\n")[0]
-        assert "SortMergeJoin" in tree
-        assert "Exchange" not in tree, plan  # zero shuffle on either side
-        # row-level sanity: equals the plain join
-        expect = orders.join(
-            lineitem, orders.o_orderkey == lineitem.l_orderkey
-        ).count()
-        assert joined.count() == expect
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
 def test_trigram_scoring_has_no_join(spark):
     """trigram_coverage self-scoring: the <=top_k-gram model is collected
     (bounded) and scoring is one InSet aggregate pass over the cached

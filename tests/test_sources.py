@@ -190,15 +190,6 @@ def test_console_report_reference_style_golden(spark):
     assert tie_row.split()[-2:] == ["0.3", "0.1"]
 
 
-def test_iceberg_probe_and_fallback(spark):
-    """The Iceberg jar is absent in this sandbox (no network to fetch it);
-    the probe must say so and the sink writer must take the parquet
-    fallback with identical directory layout."""
-    from oplog_analyzer_spark.sources.sinks import iceberg_available
-
-    assert iceberg_available(spark) is False
-
-
 def test_per_sink_aggregates_matches_reference(spark):
     """per_sink_aggregates equals the straightforward single groupBy in
     rows AND schema (names, types, nullability), INCLUDING null
