@@ -1645,15 +1645,16 @@ _CAT_VALUES = ", ".join(
 )
 
 
-def _materialized_corpus(spark: SparkSession, name: str) -> str:
-    """Publish the deterministic 300-conversation transcript corpus as
-    ``_CORPUS_ROOT/<name>`` and return the path."""
+def _materialized_corpus(spark: SparkSession) -> str:
+    """Publish the deterministic 300-conversation transcript corpus once,
+    as ``_CORPUS_ROOT/pipeline_v1``, and return the path; every corpus row
+    reads it."""
     from .transcripts import generate_transcripts
 
     def build(tmp: str, _scratch: str) -> None:
         generate_transcripts(spark, num_conversations=300).write.parquet(tmp)
 
-    return _publish_once(f"corpus/{name}", build)
+    return _publish_once("corpus/pipeline_v1", build)
 
 
 @_q(
@@ -1707,7 +1708,7 @@ def pipeline_per_sink_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.sinks import per_sink_aggregates, route_categories
     from .transcripts import tool_catalog
 
-    inp = spark.read.parquet(_materialized_corpus(spark, "pipeline_v1"))
+    inp = spark.read.parquet(_materialized_corpus(spark))
     routed = route_categories(
         unwind_applyops(exclude_system_namespaces(parse_transcripts(inp))),
         tool_catalog(spark),
@@ -1721,7 +1722,7 @@ def pipeline_per_sink_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT conv_id,
        md5(string_agg(text, chr(10) ORDER BY turn_idx)) AS text_md5,
        count(*) AS n_turns
-FROM read_parquet('{_CORPUS_ROOT}/reassembly_v1/*.parquet')
+FROM read_parquet('{_CORPUS_ROOT}/pipeline_v1/*.parquet')
 GROUP BY conv_id
 """,
 )
@@ -1732,7 +1733,7 @@ def conversation_reassembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized corpus."""
     from .operators.windows import reassemble_conversations
 
-    inp = spark.read.parquet(_materialized_corpus(spark, "reassembly_v1"))
+    inp = spark.read.parquet(_materialized_corpus(spark))
     out = reassemble_conversations(inp, bucket_span=64)
     return out.select("conv_id", F.md5("full_text").alias("text_md5"), "n_turns")
 
@@ -1767,7 +1768,7 @@ WITH parsed AS (
          regexp_extract(text, 'op:([iudcn])', 1) AS op,
          regexp_extract(text, 'id=(\S+)', 1) AS id,
          CAST(strlen(text) AS BIGINT) AS size, ts
-  FROM read_parquet('{_CORPUS_ROOT}/tail_v1/*.parquet')
+  FROM read_parquet('{_CORPUS_ROOT}/pipeline_v1/*.parquet')
 ), f AS (
   SELECT * FROM parsed
   WHERE op IN ('i', 'u', 'd') AND size >= 50 AND ns NOT LIKE 'config.%'
@@ -1799,7 +1800,7 @@ def _tail_published(spark: SparkSession) -> str:
     from .streaming.tail import TailStream
 
     def build(tmp: str, scratch: str) -> None:
-        parts = _parts(_materialized_corpus(spark, "tail_v1"))
+        parts = _parts(_materialized_corpus(spark))
         input_dir = os.path.join(scratch, "input")
         half = max(1, len(parts) // 2)
         for wave in (parts[:half], parts[half:]):

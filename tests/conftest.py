@@ -15,7 +15,7 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(master="local[4]", shuffle_partitions=8, app_name="tests")
+    s = get_spark(master="local[4]", app_name="tests")
     s.sparkContext.setLogLevel("ERROR")
     yield s
 

@@ -1269,9 +1269,10 @@ def test_connected_components_local_finish_equals_distributed(spark):
     canonical edge set fits local_max_edges) must label identically to the
     distributed star alternation on the same graphs — longs, strings,
     non-nullable ids from ``spark.range`` (a chain that needs rounds, and a
-    star that needs none) and an empty set — with the same schema,
-    nullability included; the cap probe must not disturb the distributed
-    result."""
+    star that needs none), edge frames that carry a Python-UDF id, a
+    ``rand(1)`` column or "Join"/"Sort" literals, and an empty set — with
+    the same rows and the same schema, nullability included; the cap probe
+    must not disturb the distributed result."""
     import random
 
     from oplog_analyzer_spark.functions import graph as G
@@ -1279,8 +1280,17 @@ def test_connected_components_local_finish_equals_distributed(spark):
     rng = random.Random(99)
     n = 80
     edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(150)]
+    base = spark.createDataFrame(edges, "id_a long, id_b long")
+    echo = F.udf(lambda v: v, "long")
     inputs = [
-        spark.createDataFrame(edges, "id_a long, id_b long"),
+        base,
+        base.withColumn("id_b", echo("id_b")),
+        base.withColumn("r", F.rand(1)).filter(F.col("r") >= 0),
+        base.withColumn("tag", F.lit("Join Sort")).filter(F.col("tag") != "Sort"),
+        base.select(
+            F.concat(F.lit("Join"), F.col("id_a").cast("string")).alias("id_a"),
+            F.concat(F.lit("Sort"), F.col("id_b").cast("string")).alias("id_b"),
+        ),
         spark.createDataFrame(
             [("conv_b", "conv_a"), ("conv_c", "conv_b"), ("zz", "yy")],
             "id_a string, id_b string",
@@ -1296,9 +1306,7 @@ def test_connected_components_local_finish_equals_distributed(spark):
         local = G.connected_components(df)
         dist = G.connected_components(df, local_max_edges=0)
         assert local.schema == dist.schema
-        assert {r["id"]: r["component"] for r in local.collect()} == {
-            r["id"]: r["component"] for r in dist.collect()
-        }
+        assert sorted(local.collect()) == sorted(dist.collect())
 
     empty = spark.createDataFrame([], "id_a long, id_b long")
     assert G.connected_components(empty).count() == 0

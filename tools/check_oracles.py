@@ -49,7 +49,7 @@ def main() -> int:
         return 2
     ran = [name for name in qs if not only or name in only]
 
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
